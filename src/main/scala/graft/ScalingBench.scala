@@ -195,18 +195,20 @@ object ScalingBench {
     // session spin-up (round 2 reported THAT as the decode number — 9x
     // below steady state); report it as "cold" and time steady state as
     // best-of-2 after the warm pass, mirroring how encode levels warm up.
+    // Each pass writes the full relation to the noop sink: count() would
+    // be answered from chunk metadata by the scan's count pushdown and
+    // time no decode at all.
     val (decodeColdSec, decodeSec, decodeGbps, verifyOk) = locally {
       val s = session(32, parts)
       import s.implicits._
       val outDir = s"$work/enc_32"
-      val tc = System.nanoTime()
-      DecodeJob.run(s, outDir).count()
-      val coldSec = (System.nanoTime() - tc) / 1e9
-      val dSec = (1 to 2).map { _ =>
+      def decodeAll(): Double = {
         val t0 = System.nanoTime()
-        DecodeJob.run(s, outDir).count()
+        DecodeJob.run(s, outDir).toDF().write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      }.min
+      }
+      val coldSec = decodeAll()
+      val dSec = (1 to 2).map(_ => decodeAll()).min
       val source = s.read.parquet(pagesPath).as[Page]
       val report = VerifyJob.run(s, source, DecodeJob.run(s, outDir))
       s.stop()

@@ -526,9 +526,9 @@ FROM bands GROUP BY band, bucket""",
     // source-table ground truth
     "q_dsv2_count" ->
       "SELECT count(*) AS n_pages FROM documents",
-    // the ENGINE-surface ts-range decode (DecodeJob.runProjected) must
-    // answer the same question as the DSv2 path: doc_id BETWEEN via the
-    // warc_ts = 1700000000 + doc_id construction
+    // the ENGINE-surface ts-range decode (DecodeJob.runProjected, epoch
+    // micros in): doc_id BETWEEN via the warc_ts = 1700000000 + doc_id
+    // construction
     "q_engine_ts_range" ->
       """SELECT printf('https://doc.example/%09d', doc_id) AS url,
         |       (1700000000 + doc_id) * 1000000 AS ts_us, lang

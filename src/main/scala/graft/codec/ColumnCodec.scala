@@ -473,8 +473,8 @@ object ColumnCodec {
 
   /** Zero-copy decoded view of a bytes column: row i is
     * `payload[starts(i), starts(i)+lens(i))` (or null). Exists because the
-    * decode hot path (DecodeJob) mostly turns values straight into Strings
-    * or CRC updates — materializing an Array[Byte] per row first
+    * decode hot path (the DSv2 reader) mostly wraps values straight into
+    * UTF8Strings or CRC updates — materializing an Array[Byte] per row first
     * (decodeBytes) is a copy per value that the consumer immediately
     * throws away. For dict-encoded columns the win is bigger still: rows
     * point into the SHARED dictionary buffer, so a column of 64k rows over

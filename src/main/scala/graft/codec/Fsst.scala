@@ -321,16 +321,10 @@ case object FsstBytes extends ByteCodec {
     out.toByteArray
   }
 
-  /** Estimated encoded size from a sample compression (used by the
-    * selector; the structural <=FL bound is enforced post-encode). */
-  def estimateSize(data: Array[Byte]): Long = {
-    if (data.isEmpty) return 3L
-    val s = sample(data)
-    estimateSizeWithTable(data, s, train(s))
-  }
-
-  /** Same estimate given an already-trained table (lets the selector train
-    * once and reuse the table for the real encode if FSST wins). */
+  /** Estimated encoded size from a sample compression with an
+    * already-trained table (used by the selector, which trains once and
+    * reuses the table for the real encode if FSST wins; the structural
+    * <=FL bound is enforced post-encode). */
   def estimateSizeWithTable(data: Array[Byte], sampleData: Array[Byte], table: SymbolTable): Long = {
     val enc = encodeWithTable(sampleData, table)
     val tableBytes = 1L + table.symbols.map(_.length + 1).sum

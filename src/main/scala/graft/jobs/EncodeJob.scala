@@ -975,7 +975,7 @@ object EncodeJob {
     }
 
     // null texts are SKIPPED — the decode-side lineage check
-    // (DecodeJob.requireTextCrc) skips null rows the same way
+    // (GraftPartitionReader.requireTextCrc) skips null rows the same way
     val crc = new CRC32()
     texts.foreach(t => if (t != null) crc.update(t))
 

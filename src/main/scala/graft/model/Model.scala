@@ -20,6 +20,22 @@ object TsMicros {
     t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
     t
   }
+
+  /** Stored micros -> Spark's internal TIMESTAMP micros. The encoder
+    * stores the micros of the java.sql.Timestamp Spark hands it, which
+    * Spark builds on the hybrid Julian/Gregorian calendar; before the
+    * 1582 Gregorian switch those differ from Spark's internal
+    * proleptic-Gregorian micros by days. A reader emitting internal
+    * values converts exactly as Spark's own Timestamp encoder does
+    * (identity for every instant from 1970 on). */
+  def toInternal(stored: Long): Long =
+    if (stored >= 0L) stored
+    else org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(toTs(stored))
+
+  /** Inverse of [[toInternal]]: internal micros -> stored micros. */
+  def fromInternal(internal: Long): Long =
+    if (internal >= 0L) internal
+    else micros(org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(internal))
 }
 
 /** Input row shape, exactly BASELINE.json `input_hint`:

@@ -29,8 +29,10 @@ object Queries {
     * boundaries, so a single-row-group file plans exactly ONE scan task
     * and every row-local pass downstream runs single-threaded no matter
     * how many cores the session has. When the scan plans fewer map tasks
-    * than HALF the session's default parallelism, a round-robin
-    * repartition restores map-side parallelism; the shuffle it adds
+    * than HALF the session's default parallelism (never fewer than 2, so
+    * a single-task scan is caught at a floor of 2 or 3 too; a floor of 1
+    * has no parallelism to restore), a round-robin repartition restores
+    * map-side parallelism; the shuffle it adds
     * moves only the degenerate (small, by construction) input. At
     * production scale a corpus scan plans thousands of splits, the
     * condition is false, and the guard adds NOTHING — this is the
@@ -54,7 +56,7 @@ object Queries {
     val floor = spark.conf.get("spark.graft.scan.minMapTasks",
       spark.sparkContext.defaultParallelism.toString).toInt
     require(floor >= 0, s"spark.graft.scan.minMapTasks must be >= 0, got $floor")
-    if (floor > 0 && df.rdd.getNumPartitions < math.max(1, floor / 2))
+    if (floor > 1 && df.rdd.getNumPartitions < math.max(2, floor / 2))
       df.repartition(floor)
     else df
   }
@@ -879,15 +881,17 @@ object Queries {
     // 0.69 s at sf0.1 for 50k rows). Split, the sketch agg keeps one
     // buffer per source and the exact NDV runs as a plain two-stage
     // hash aggregate with primitive buffers; the rejoin moves #sources
-    // rows. Same aggregates over the same rows — identical output.
+    // rows. Same aggregates over the same rows — identical output; the
+    // rejoin is NULL-SAFE so a null-source group survives it, as it does
+    // the single aggregation.
     val exact = d.groupBy($"source").agg(countDistinct($"n_chars").as("exact_ndv"))
     val sk = d.groupBy($"source").agg(
       approx_count_distinct($"n_chars", 0.02).as("hll_ndv"),
       expr("percentile(n_chars, 0.5d)").as("p50"),
       expr("approx_percentile(n_chars, 0.5d, 10000)").as("ap50"))
-    exact.join(sk, "source")
+    exact.join(sk, exact("source") <=> sk("source"))
       .select(
-        $"source", $"exact_ndv",
+        exact("source"), $"exact_ndv",
         (abs($"hll_ndv" - $"exact_ndv") <= $"exact_ndv" * 0.05 + 1.0)
           .cast("bigint").as("hll_ok"),
         (abs($"ap50" - $"p50") <= $"p50" * 0.05 + 1.0)
@@ -1740,14 +1744,14 @@ object Queries {
 
   /** Range-pruned engine decode under the oracle: a PROJECTED decode of
     * the SHARED encoded scratch ([[dsv2Scratch]] — encode paid once per
-    * session+input, exactly like its ts-range twin [[qEngineTsRange]])
-    * restricted to an inclusive url range — chunk-level (urlMin, urlMax)
-    * pruning plus exact row-level UTF-8 range filtering, the engine's
-    * partition-pruning analog. This query asserts the RANGE-PRUNED SCAN,
-    * not the encode (the honest per-invocation encode gates remain
-    * [[qEngineRoundtrip]] and [[qDsv2Write]]), so re-paying a full encode
-    * per call multiplied the suite's largest fixed cost without widening
-    * coverage. The %09d url embeds doc_id order-preservingly, so the
+    * session+input, like [[qEngineTsRange]]) restricted to an inclusive
+    * url range, which `runProjected` hands to the DSv2 scan as pushed
+    * bounds — chunk-level (urlMin, urlMax) pruning plus exact row-level
+    * UTF-8 range filtering, the engine's partition-pruning analog. This
+    * query asserts the RANGE-PRUNED SCAN, not the encode (the honest
+    * per-invocation encode gates remain [[qEngineRoundtrip]] and
+    * [[qDsv2Write]]), so re-paying a full encode per call multiplied the
+    * suite's largest fixed cost without widening coverage. The %09d url embeds doc_id order-preservingly, so the
     * oracle is a plain BETWEEN on doc_id. */
   def qEngineRtRange(spark: SparkSession, dir: String): DataFrame = {
     val out = dsv2Scratch(spark, dir)
@@ -1837,11 +1841,10 @@ object Queries {
   }
 
   /** Time-range decode through the ENGINE surface (DecodeJob): the
-    * twin of [[qDsv2TsRange]] on the other front door — chunk-level
-    * (tsMin, tsMax) pruning plus exact decoded-micros row filtering in
-    * `runProjected`, over the shared encoded scratch. Both doors must
-    * answer the same ts-range question identically; the oracle holds
-    * each to the source-table ground truth. */
+    * epoch-micros API of `runProjected`, whose timestamp-literal bounds
+    * the DSv2 scan consumes (chunk-level (tsMin, tsMax) pruning plus
+    * exact decoded-micros row filtering), over the shared encoded
+    * scratch. The oracle holds it to the source-table ground truth. */
   def qEngineTsRange(spark: SparkSession, dir: String): DataFrame = {
     val out = dsv2Scratch(spark, dir)
     val lo = (1700000000L + 200L) * 1000000L

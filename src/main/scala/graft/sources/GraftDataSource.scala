@@ -21,12 +21,13 @@ import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count,
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, InsertableRelation, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, InsertableRelation, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.codec.ColumnCodec
+import graft.model.TsMicros
 
 /** DataSource V2 read surface for the engine's encoded chunk table —
   * the declarative twin of the reference CLI's decompress direction
@@ -37,9 +38,10 @@ import graft.codec.ColumnCodec
   * {{{ spark.read.format("graft").load(encodeDir) }}}
   *
   * presents the decoded Page table (url, warc_ts, html, text, lang) as a
-  * first-class Catalyst relation. The connector implements the two
-  * pushdowns the chunk layout was designed for (see EncodedChunk's
-  * scaladoc and DecodeJob.runProjected):
+  * first-class Catalyst relation. This reader is the engine's ONE decode
+  * path: [[graft.jobs.DecodeJob]] is a thin front door over it. The
+  * connector implements the two pushdowns the chunk layout was designed
+  * for (see EncodedChunk's scaladoc):
   *
   *  - '''Column pruning''' ([[SupportsPushDownRequiredColumns]]): only
   *    the requested columns' `block` leaves are read from the chunk
@@ -59,8 +61,10 @@ import graft.codec.ColumnCodec
   *    the same three-level skip through the chunk (tsMin, tsMax) epoch-
   *    micros statistics (row-group stats → chunk stats → exact decoded
   *    micros). Pre-round-7 tables without ts statistics fall back to
-  *    the exact row filter alone — never a wrong prune. All other
-  *    predicates are returned as residuals for Spark to evaluate.
+  *    the exact row filter alone — never a wrong prune. `IS NOT NULL`
+  *    on a bounded column is implied by the exact filter and consumed
+  *    with it. All other predicates are returned as residuals for Spark
+  *    to evaluate.
   *  - '''count(*) pushdown''' ([[SupportsPushDownAggregates]]): a
   *    global unfiltered count is answered from the chunk metadata
   *    `rows` column in O(#chunks) without touching a payload byte —
@@ -69,7 +73,8 @@ import graft.codec.ColumnCodec
   * Values are emitted as [[InternalRow]]s built directly on the decoded
   * block views (`UTF8String.fromBytes` over the shared payload buffer —
   * no per-cell String round-trip), and `warc_ts` micros pass through
-  * unconverted (InternalRow's native timestamp representation).
+  * unconverted from 1970 on (InternalRow's native timestamp
+  * representation; earlier values go through [[TsMicros.toInternal]]).
   *
   * Scale shape: one [[InputPartition]] per chunk file (the same
   * granularity the encoder committed — bounded by the 65k-row/16 MB
@@ -336,7 +341,8 @@ final class GraftScanBuilder(path: String) extends ScanBuilder
   private var tsLos: List[Long] = Nil
   private var tsHis: List[Long] = Nil
   private var pushed: Array[Filter] = Array.empty
-  private var countPushed = 0
+  private def hasUrlBound = los.nonEmpty || his.nonEmpty || losStrict.nonEmpty || hisStrict.nonEmpty
+  private def hasTsBound = tsLos.nonEmpty || tsHis.nonEmpty
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     // Spark hands back a subset of PageSchema in its own order; honor it
@@ -344,14 +350,14 @@ final class GraftScanBuilder(path: String) extends ScanBuilder
     // zero-width rows)
     required = requiredSchema
 
-  /** Pushed timestamp literal → epoch micros (the kernel's and the chunk
-    * statistics' representation — graft.model.TsMicros is the one
-    * Timestamp definition; Instant is this call site's own case). */
+  /** Pushed timestamp literal → stored epoch micros (the kernel's and the
+    * chunk statistics' representation — [[TsMicros]] is the one
+    * Timestamp definition). An Instant carries Spark's internal micros. */
   private def tsMicros(v: Any): Option[Long] = v match {
     case i: java.time.Instant =>
-      Some(Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-        (i.getNano / 1000).toLong))
-    case t: java.sql.Timestamp => Some(graft.model.TsMicros.micros(t))
+      Some(TsMicros.fromInternal(
+        org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(i)))
+    case t: java.sql.Timestamp => Some(TsMicros.micros(t))
     case _ => None
   }
 
@@ -378,16 +384,23 @@ final class GraftScanBuilder(path: String) extends ScanBuilder
       case _ => false
     }
     val (acc, residual) = filters.partition(consume)
-    pushed = acc
-    residual
+    // Spark infers IsNotNull from every comparison; the exact row filters
+    // already drop null url / warc_ts rows once that column has a bound,
+    // so the inferred check is implied and consumed too — a residual one
+    // would keep a Filter above the scan and the column in its output
+    val (implied, rest) = residual.partition {
+      case IsNotNull("url") => hasUrlBound
+      case IsNotNull("warc_ts") => hasTsBound
+      case _ => false
+    }
+    pushed = acc ++ implied
+    rest
   }
   override def pushedFilters(): Array[Filter] = pushed
 
   override def supportCompletePushDown(aggregation: Aggregation): Boolean = false
   override def pushAggregation(aggregation: Aggregation): Boolean = {
-    val noPredicates = los.isEmpty && his.isEmpty && losStrict.isEmpty &&
-      hisStrict.isEmpty && tsLos.isEmpty && tsHis.isEmpty
-    if (!noPredicates || aggregation.groupByExpressions.nonEmpty ||
+    if (hasUrlBound || hasTsBound || aggregation.groupByExpressions.nonEmpty ||
         aggregation.aggregateExpressions.isEmpty) return false
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
@@ -474,8 +487,8 @@ final class GraftScan(path: String, required: StructType,
     val fmt = TableIO.format(spark)
     require(fmt == "parquet",
       s"graft DSv2 read supports the parquet chunk layout; " +
-        s"spark.graft.table.format=$fmt is configured — read this table " +
-        "through DecodeJob/TableIO instead")
+        s"spark.graft.table.format=$fmt is configured — the chunk table " +
+        "must stay on the parquet directory layout (see TableIO)")
     val hconf = spark.sessionState.newHadoopConf()
     val root = new HPath(path)
     val fs = root.getFileSystem(hconf)
@@ -604,7 +617,8 @@ final class GraftAggReader(file: String, conf: Configuration, tokens: Array[Stri
         var left = pages.getRowCount
         while (left > 0L) {
           val g = rr.read()
-          if (needCount) total = Math.addExact(total, g.getLong("rows", 0))
+          if (needCount) total += GraftPartitionReader.checkedRows(g.getLong("rows", 0),
+            s"a chunk in $file")
           if (needUrl) {
             val mn = g.getBinary("urlMin", 0).getBytes
             val mx = g.getBinary("urlMax", 0).getBytes
@@ -642,8 +656,8 @@ final class GraftAggReader(file: String, conf: Configuration, tokens: Array[Stri
       case "count" => total
       case "min_url" => if (minUrl == null) null else UTF8String.fromBytes(minUrl)
       case "max_url" => if (maxUrl == null) null else UTF8String.fromBytes(maxUrl)
-      case "min_ts" => if (haveTs) java.lang.Long.valueOf(minTs) else null
-      case "max_ts" => if (haveTs) java.lang.Long.valueOf(maxTs) else null
+      case "min_ts" => if (haveTs) java.lang.Long.valueOf(TsMicros.toInternal(minTs)) else null
+      case "max_ts" => if (haveTs) java.lang.Long.valueOf(TsMicros.toInternal(maxTs)) else null
     })
   override def close(): Unit = if (reader != null) reader.close()
 }
@@ -815,7 +829,8 @@ final class GraftPartitionReader(file: String, conf: Configuration,
   private def decodeChunkRow(g: Group): Iterator[InternalRow] = {
     val pid = g.getInteger("pid", 0)
     val blockIdx = g.getInteger("blockIdx", 0)
-    val n = g.getLong("rows", 0).toInt
+    val n = GraftPartitionReader.checkedRows(g.getLong("rows", 0),
+      s"chunk pid=$pid blockIdx=$blockIdx")
     if (hasUrlBounds) {
       // chunk-level pruning on (urlMin, urlMax) BEFORE any block decode
       if (!bounds.chunkUrlOverlaps(
@@ -837,7 +852,7 @@ final class GraftPartitionReader(file: String, conf: Configuration,
       val v = ColumnCodec.decodeBytesView(blockOf(g, pid, blockIdx, name))
       if (name == "url") urlView = v
       if (name == "text")
-        graft.jobs.DecodeJob.requireTextCrc(v, g.getLong("textCrc32", 0), pid, blockIdx)
+        GraftPartitionReader.requireTextCrc(v, g.getLong("textCrc32", 0), pid, blockIdx)
       v
     }
     // warc_ts decodes ONCE whether it serves the projection, the exact
@@ -856,21 +871,14 @@ final class GraftPartitionReader(file: String, conf: Configuration,
     val matches: Array[Int] =
       if (!hasUrlBounds && !hasTsBounds) null // all rows
       else {
-        // shared UTF-8 byte-order range semantics — one definition with
-        // DecodeJob.runProjected (see DecodeJob.urlRangeKeep)
         val urlKeep: Int => Boolean =
           if (!hasUrlBounds) null
-          else graft.jobs.DecodeJob.urlRangeKeep(bytesView("url"),
-            bounds.urlLo, bounds.urlHi, bounds.urlLoStrict, bounds.urlHiStrict)
-        // exact ts filter on the DECODED micros: null ts never matches a
-        // range bound (SQL comparison semantics)
-        // exact ts filter on the DECODED micros — shared semantics with
-        // the engine decode (see DecodeJob.tsRangeKeep)
+          else GraftPartitionReader.urlRangeKeep(bytesView("url"), bounds)
         val tsKeep: Int => Boolean =
           if (!hasTsBounds) null
           else {
             val (micros, nulls) = tsDecoded()
-            graft.jobs.DecodeJob.tsRangeKeep(micros, nulls, bounds.tsLo, bounds.tsHi)
+            GraftPartitionReader.tsRangeKeep(micros, nulls, bounds)
           }
         val b = Array.newBuilder[Int]
         var j = 0
@@ -895,7 +903,7 @@ final class GraftPartitionReader(file: String, conf: Configuration,
         val (micros, nulls) = tsDecoded()
         (j: Int) =>
           if (nulls != null && nulls(j)) null
-          else java.lang.Long.valueOf(micros(j)) // InternalRow micros
+          else java.lang.Long.valueOf(TsMicros.toInternal(micros(j)))
       case other => throw new IllegalArgumentException(s"unknown column $other")
     }
     val idx: Iterator[Int] =
@@ -907,4 +915,53 @@ final class GraftPartitionReader(file: String, conf: Configuration,
       new GenericInternalRow(vals)
     }
   }
+}
+
+object GraftPartitionReader {
+
+  /** A chunk's `rows` metadata narrowed to Int with a named check: a
+    * corrupt value past Int.MaxValue would otherwise wrap and decode the
+    * chunk as a wrong (possibly zero) number of rows — silent truncation. */
+  private[sources] def checkedRows(rows: Long, chunk: => String): Int = {
+    require(rows >= 0L && rows <= Int.MaxValue, s"$chunk claims $rows rows — corrupt metadata")
+    rows.toInt
+  }
+
+  /** Decoded-text CRC lineage check: the decoded text column must
+    * reproduce the CRC the encoder recorded for this chunk (null rows
+    * skipped, as the encoder skips them) — corruption fails fast, at the
+    * chunk that broke, instead of surfacing later as a verify mismatch. */
+  private[sources] def requireTextCrc(v: ColumnCodec.BytesView, recorded: Long, pid: Int, blockIdx: Int): Unit = {
+    val crc = new java.util.zip.CRC32()
+    var k = 0
+    while (k < v.n) {
+      if (!v.isNull(k)) crc.update(v.payload, v.start(k), v.len(k))
+      k += 1
+    }
+    require(crc.getValue == recorded,
+      s"chunk pid=$pid blockIdx=$blockIdx: decoded text CRC ${crc.getValue} " +
+        s"!= recorded $recorded (corrupt block?)")
+  }
+
+  /** Exact row-level url-range keep filter over a decoded url view, in
+    * UTF-8 BYTE order on the raw payload — the order the encoder sorted
+    * by, the chunk-level (urlMin, urlMax) prune uses, and Spark's own
+    * UTF8String comparison defines (Java String order, UTF-16 code units,
+    * disagrees for supplementary characters vs U+E000..U+FFFF). A null
+    * url never matches. */
+  private[sources] def urlRangeKeep(v: ColumnCodec.BytesView, b: GraftBounds): Int => Boolean =
+    j => !v.isNull(j) && {
+      val s = v.start(j)
+      val e = s + v.len(j)
+      def cmp(x: Array[Byte]): Int =
+        java.util.Arrays.compareUnsigned(v.payload, s, e, x, 0, x.length)
+      b.urlLo.forall(cmp(_) >= 0) && b.urlHi.forall(cmp(_) <= 0) &&
+        b.urlLoStrict.forall(cmp(_) > 0) && b.urlHiStrict.forall(cmp(_) < 0)
+    }
+
+  /** Exact row-level warc_ts-range keep filter over DECODED micros: a
+    * null ts never matches (SQL comparison semantics); bounds inclusive. */
+  private[sources] def tsRangeKeep(micros: Array[Long], nulls: Array[Boolean], b: GraftBounds): Int => Boolean =
+    j => (nulls == null || !nulls(j)) &&
+      b.tsLo.forall(micros(j) >= _) && b.tsHi.forall(micros(j) <= _)
 }

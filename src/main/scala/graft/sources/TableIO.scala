@@ -13,14 +13,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `spark.graft.table.format=iceberg` (plus the usual catalog conf)
   * switches every read/write site in one place; no job code changes.
   *
-  * Documented exclusion: the crash-RECOVERY surfaces — attempt-marker
-  * sidecars under `_attempts/`, the begin-only rollback's raw chunk-file
-  * deletes, and the `_temporary` cleanup — assume a directory-backed
-  * chunk table. Under a snapshot-managed format those file deletes would
-  * bypass table metadata (stale references -> FileNotFound on scan), so
-  * an Iceberg deployment must either route rollback through the table
-  * format (DELETE by attemptId + expire snapshots) or keep the CHUNK
-  * table on the directory layout and switch only input/decoded tables.
+  * Documented exclusion: the CHUNK table must stay on the parquet
+  * directory layout. The DSv2 reader ([[GraftDataSource]]) is the
+  * engine's only decoder; it plans its scan from a listing of `chunks/`
+  * parquet files and refuses to run when another format is configured.
+  * The crash-RECOVERY surfaces — attempt-marker sidecars under
+  * `_attempts/`, the begin-only rollback's raw chunk-file deletes, and
+  * the `_temporary` cleanup — assume the same directory-backed chunk
+  * table.
   */
 object TableIO {
 

@@ -31,13 +31,34 @@ class DecodeProjectionSpec extends AnyFunSuite with SparkFixture {
   test("projected scan reads only the requested block leaves") {
     val plan = DecodeJob.runProjected(spark, dir, Seq("url"))
       .queryExecution.executedPlan.toString
-    val readSchema = plan.linesIterator.find(_.contains("ReadSchema:"))
-      .getOrElse(fail("no FileScan ReadSchema in plan:\n" + plan))
-    // ReadSchema must carry the url struct but neither text nor html blocks
-    assert(readSchema.contains("url:struct<block:binary>"), readSchema)
-    assert(!readSchema.contains("html:"), "html leaf not pruned: " + readSchema)
-    assert(!readSchema.contains("text:"), "text leaf not pruned: " + readSchema)
-    assert(!readSchema.contains("lang:"), "lang leaf not pruned: " + readSchema)
+    val scan = plan.linesIterator.find(_.contains("GraftScan"))
+      .getOrElse(fail("no GraftScan in plan:\n" + plan))
+    // the scan reads the url block leaf and no other: not text, html,
+    // warc_ts or lang (GraftDataSourceSpec measures the I/O this saves)
+    assert(scan.contains("ReadColumns=[url]"), scan)
+  }
+
+  test("url and ts ranges reach GraftScan as pushed bounds, no residual filter") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val source = WebtextGen.pages(spark, 800L, partitions = 4)
+    val urls = source.select($"url").as[String].collect().sorted
+    val micros = source.select(unix_micros($"warc_ts")).as[Long].collect().sorted
+    val (lo, hi, tlo, thi) = (urls(100), urls(700), micros(150), micros(650))
+    val df = DecodeJob.runProjected(spark, dir, Seq("lang"), Some((lo, hi)), Some((tlo, thi)))
+    val plan = df.queryExecution.executedPlan.toString
+    val scan = plan.linesIterator.find(_.contains("GraftScan"))
+      .getOrElse(fail("no GraftScan in plan:\n" + plan))
+    for (b <- Seq(s"url >= '$lo'", s"url <= '$hi'",
+        s"warc_ts_micros >= $tlo", s"warc_ts_micros <= $thi"))
+      assert(scan.contains(b), s"bound '$b' not pushed into GraftScan:\n$plan")
+    // rows would stay correct under a residual Filter, but pruning would
+    // silently disappear: every url/warc_ts predicate must be consumed
+    val residual = df.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+    }.flatMap(_.references.map(_.name)).filter(Set("url", "warc_ts"))
+    assert(residual.isEmpty, s"residual filter on ${residual.distinct} above the scan:\n$plan")
+    assert(scan.contains("ReadColumns=[lang]"), scan)
   }
 
   test("url-range decode prunes chunks and filters rows exactly") {
@@ -115,6 +136,37 @@ class DecodeProjectionSpec extends AnyFunSuite with SparkFixture {
       .select($"url", $"warc_ts".cast("long"), md5($"html"))
       .as[(String, Long, String)].collect().sorted
     assert(got.toSeq == want.toSeq)
+  }
+
+  test("pre-Gregorian timestamps decode, filter and aggregate as the source values") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // before the 1582 switch Spark's java.sql.Timestamp (hybrid calendar)
+    // and its internal micros (proleptic Gregorian) differ by days
+    val out = tmpDir("graft-proj-ancient")
+    graft.ScalingLevel.rmrf(out)
+    val src = spark.createDataset(Seq("1000-03-01 12:00:00", "1582-10-01 00:00:00",
+        "1900-01-01 00:00:00", "2020-01-01 00:00:00").zipWithIndex.map { case (t, i) =>
+      graft.model.Page(s"https://x/$i", java.sql.Timestamp.valueOf(t), Array[Byte](1), s"t$i", "en")
+    })
+    EncodeJob.run(spark, src, out, EncodeJob.Config(numPartitions = 1))
+    val report = VerifyJob.run(spark, src, DecodeJob.run(spark, out))
+    assert(report.ok, report.toString)
+    val lo = java.sql.Timestamp.valueOf("1000-03-01 12:00:00")
+    val hi = java.sql.Timestamp.valueOf("1582-10-01 00:00:00")
+    val want = Seq("https://x/0", "https://x/1")
+    for (java8 <- Seq("false", "true")) {
+      spark.conf.set("spark.sql.datetime.java8API.enabled", java8)
+      try {
+        val got = spark.read.format("graft").load(out)
+          .filter($"warc_ts".between(lit(lo), lit(hi))).select($"url")
+          .as[String].collect().sorted.toSeq
+        assert(got == want, s"java8API=$java8: ts filter returned $got")
+      } finally spark.conf.unset("spark.sql.datetime.java8API.enabled")
+    }
+    val agg = spark.read.format("graft").load(out)
+      .agg(min($"warc_ts").cast("string"), max($"warc_ts").cast("string")).head()
+    assert(agg.toSeq == Seq("1000-03-01 12:00:00", "2020-01-01 00:00:00"), agg.toString)
   }
 
   test("duplicate or unknown projection columns are rejected at the API boundary") {

@@ -179,9 +179,15 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     val tampered = chunks.map(c => c.copy(textCrc32 = c.textCrc32 ^ 1L))
     spark.createDataset(tampered.toSeq).write.mode("overwrite")
       .parquet(EncodeJob.chunksDir(outDir))
-    val ex = intercept[Exception] { DecodeJob.run(spark, outDir).count() }
-    assert(ex.toString.contains("CRC") ||
-      Option(ex.getCause).exists(_.toString.contains("CRC")), ex.toString)
+    // an action that decodes text: count() is answered from chunk metadata
+    def decodes(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    for (df <- Seq(DecodeJob.run(spark, outDir).toDF(),
+        spark.read.format("graft").load(outDir).select("text"))) {
+      val ex = intercept[Exception] { decodes(df) }
+      assert(ex.toString.contains("CRC") ||
+        Option(ex.getCause).exists(_.toString.contains("CRC")), ex.toString)
+    }
   }
 
   test("manifest url ranges merge in UTF-8 order (supplementary-plane urls)") {

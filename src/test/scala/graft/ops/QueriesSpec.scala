@@ -65,6 +65,15 @@ class QueriesSpec extends AnyFunSuite with SparkFixture {
         "minMapTasks=0 must disable the guard")
       assert(plain == guarded, "guarded and plain reads must produce identical results")
     } finally spark.conf.unset("spark.graft.scan.minMapTasks")
+    // a floor of 2 (a 2-core session) must still repartition the
+    // single-task scan: half of 2 is 1, which no scan plans fewer than
+    spark.conf.set("spark.graft.scan.minMapTasks", "2")
+    try {
+      val plan2 = Queries.qMinhashLsh(spark, dir).queryExecution.executedPlan.toString
+      assert(plan2.contains("RoundRobinPartitioning"),
+        "minMapTasks=2 must repartition a single-task scan")
+      assert(run() == guarded, "floor-2 guarded read diverged")
+    } finally spark.conf.unset("spark.graft.scan.minMapTasks")
   }
 
   test("line-granular ops: windows, keep-first winners, exact df means, empty-doc guard") {
@@ -334,6 +343,21 @@ class QueriesSpec extends AnyFunSuite with SparkFixture {
       try Queries.qShuffleShards(spark, dir)
       finally spark.conf.unset("spark.graft.shuffle.shards")
     }
+
+    // sketch bounds: a NULL source is a group of its own; the rejoin of
+    // the exact and sketch aggregations must keep it (an inner equi-join
+    // drops null keys) and emit one source column
+    val kdir = tmpDir("graft-queries-sketch")
+    Seq[(Long, String, String, String, Long)](
+      (0L, "a", "en", "s", 5L), (1L, "b", "en", "s", 7L), (2L, "c", "en", "s", 7L),
+      (3L, "d", "en", null, 4L), (4L, "e", "en", null, 4L)
+    ).toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$kdir/documents.parquet")
+    val sk = Queries.qSketchBounds(spark, kdir)
+    assert(sk.columns.toSeq == Seq("source", "exact_ndv", "hll_ok", "pctl_ok"), sk.columns.toSeq)
+    val bounds = sk.as[(Option[String], Long, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(bounds == Seq((None, 1L, 1L, 1L), (Some("s"), 2L, 1L, 1L)),
+      s"sketch bounds mismatch: $bounds")
   }
 
   test("processScratch sweeps dead-JVM dirs, keeps live ones, wipes its own") {

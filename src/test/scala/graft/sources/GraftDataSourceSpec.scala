@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
-import graft.jobs.{DecodeJob, EncodeJob}
+import graft.jobs.EncodeJob
 
 /** Test-only local FS that counts every byte its streams hand out —
   * registered under `cntfile://` so a spec can measure the connector's
@@ -52,9 +52,10 @@ final class CountingIn(in: FSDataInputStream) extends java.io.InputStream
   override def close(): Unit = in.close()
 }
 
-/** The DataSource V2 read surface: `spark.read.format("graft")` must
-  * equal the DecodeJob paths bit-for-bit, prune columns down to the
-  * parquet block leaves, and consume url-range predicates exactly. */
+/** The DataSource V2 read surface — the engine's one decode path:
+  * `spark.read.format("graft")` must equal the encoded source
+  * bit-for-bit, prune columns down to the parquet block leaves, and
+  * consume url-range predicates exactly. */
 class GraftDataSourceSpec extends AnyFunSuite with SparkFixture {
 
   private lazy val dir = {
@@ -66,9 +67,9 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture {
 
   private def read(): DataFrame = spark.read.format("graft").load(dir)
 
-  test("full read equals DecodeJob.run on every column") {
+  test("full read equals the WebtextGen source on every column") {
     val got = read()
-    val want = DecodeJob.run(spark, dir).toDF()
+    val want = WebtextGen.pages(spark, 800L, partitions = 4).toDF()
     assert(got.count() == 800L)
     // exceptAll both directions: covers url/text/lang strings, html
     // binary, and warc_ts micros — any cell divergence survives one side
@@ -492,6 +493,32 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture {
       .filter(_.getName.startsWith(".__overwrite-"))
     assert(beside.isEmpty && inside.isEmpty,
       s"staging leftovers: ${(beside ++ inside).mkString(", ")}")
+  }
+
+  test("a chunk whose rows value overflows Int fails the read as corrupt metadata") {
+    import spark.implicits._
+    val out = tmpDir("graft-dsv2-rows")
+    graft.ScalingLevel.rmrf(out)
+    EncodeJob.run(spark, WebtextGen.pages(spark, 200L, seed = 5L, partitions = 2), out,
+      EncodeJob.Config(numPartitions = 2))
+    val chunks = spark.read.parquet(EncodeJob.chunksDir(out))
+      .as[graft.model.EncodedChunk].collect()
+    // 2^32 narrows to 0 with a plain toInt: the chunk would decode as
+    // zero rows with no error
+    val tampered = chunks.head.copy(rows = 1L << 32) +: chunks.tail
+    spark.createDataset(tampered.toSeq).write.mode("overwrite")
+      .parquet(EncodeJob.chunksDir(out))
+    def chain(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => String.valueOf(e.getMessage) +: chain(e.getCause))
+    // the decoding scan and the metadata count pushdown both refuse it
+    for ((what, action) <- Seq[(String, () => Unit)](
+        "decode" -> (() => spark.read.format("graft").load(out).select("url")
+          .write.format("noop").mode("overwrite").save()),
+        "count" -> (() => spark.read.format("graft").load(out).count()))) {
+      val err = intercept[Exception](action())
+      assert(chain(err).exists(_.contains(s"claims ${1L << 32} rows — corrupt metadata")),
+        s"$what: expected the named corrupt-metadata error, got: ${chain(err)}")
+    }
   }
 
   test("empty projection (count star) and empty table read") {
