@@ -1,7 +1,6 @@
 package graft.jobs
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
 import java.util.zip.CRC32
 
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
@@ -16,14 +15,23 @@ import graft.sources.TableIO
   * Pipeline (SURVEY.md §3.4):
   *   read -> assign pid from pinned url-range bounds (narrow column op,
   *   no typed materialization) -> filter completed (resume) ->
-  *   repartition(pid) -> sortWithinPartitions(pid, url) ->
-  *   mapPartitions(encode) -> write chunks; the kernel's per-pid metadata
-  *   summaries ride back on an accumulator (the Spark analog of the
-  *   reference's MPI_Allgather of sizes, fl_gpu.cu:100-109) and become
-  *   the manifest — the chunk table is written once and never re-read.
+  *   repartition(pid) -> sortWithinPartitions(pid, url) -> url/text/lang
+  *   cast to binary -> mapPartitions(encode) -> write chunks; the
+  *   kernel's per-pid metadata summaries ride back on an accumulator (the
+  *   Spark analog of the reference's MPI_Allgather of sizes,
+  *   fl_gpu.cu:100-109) and become the manifest — the chunk table is
+  *   written once and never re-read.
   *
-  * Exactly one shuffle (the pid repartition) and exactly two jobs: the
-  * bounds sample (one pass, count+reservoir fused) and the encode+write.
+  * The kernel sees the exact bytes Spark holds: no String round trip, so
+  * a text/lang value that is not valid UTF-8 still decodes to its own
+  * bytes. The url is the range key and its chunk bounds are Strings, so
+  * a url that is not valid UTF-8 fails the encode (`validate_utf8`,
+  * error class INVALID_UTF8_STRING) before any chunk is written.
+  *
+  * Exactly one shuffle of the payload (the pid repartition). The payload
+  * passes through one job, the encode+write; the others are small: the
+  * bounds sample (one pass, count+reservoir fused), the manifest write
+  * and the whole-manifest totals (skipped under `wholeTableStats = false`).
   * Encoding is shuffle-free and embarrassingly parallel, mirroring the
   * reference's 128-aligned per-rank split
   * (/root/reference/src/file_io.cu:39-56); the reference's
@@ -54,11 +62,12 @@ import graft.sources.TableIO
   * the mean under a 50%-single-host distribution. AQE skew-join handles
   * the verify-join side.
   */
-/** Shuffle row: input page + its assigned logical partition id. Top-level
-  * (not nested) so Spark's reflection-based Encoder can resolve it. */
+/** Shuffle row: input page + its assigned logical partition id, with
+  * url/text/lang as the UTF-8 bytes Spark already holds. Top-level (not
+  * nested) so Spark's reflection-based Encoder can resolve it. */
 final case class PidPage(
-    pid: Int, url: String, warc_ts: java.sql.Timestamp,
-    html: Array[Byte], text: String, lang: String)
+    pid: Int, url: Array[Byte], warc_ts: java.sql.Timestamp,
+    html: Array[Byte], text: Array[Byte], lang: Array[Byte])
 
 /** Per-pid metadata summary the encode kernel sends back on an
   * accumulator (O(#pids) driver state; payload bytes never leave the
@@ -74,23 +83,10 @@ object EncodeJob {
       numPartitions: Int = 32,
       targetBlockBytes: Long = 16L << 20,
       maxBlockRows: Int = 65536,
+      /** Skip pids already in the manifest. `false` is the streaming
+        * front end's setting, and it also arms the bounds pin guard (see
+        * [[BoundsPinRowsPerPartition]]). */
       resume: Boolean = true,
-      seedSampleSize: Int = 10000,
-      /** Pin bounds.json only when the bounds sample saw at least this
-        * many rows. Guards streaming front ends: a tiny first micro-batch
-        * would otherwise pin unrepresentative url bounds forever.
-        * Negative = UNSET (the default): batch runs always pin;
-        * [[graft.streaming.StreamingEncode]] substitutes its own default
-        * of 16 rows/partition. An EXPLICIT 0 means "always pin, even for
-        * a tiny first micro-batch" and is honored by streaming (the
-        * sentinel exists so that choice is distinguishable from
-        * left-at-default). The guard only applies when `resume = false`
-        * (the streaming path): a resumable batch run always pins computed
-        * bounds, because re-deriving them after a crash is only identical
-        * under an identical input scan partitioning — file-split changes
-        * between runs would silently shift pid assignment against the
-        * completed-pid set. */
-      boundsPinMinRows: Long = -1L,
       /** Manifest lineage tag; None = fresh random UUID. Streaming sets
         * a deterministic per-micro-batch tag ("batch-<id>") so a replayed
         * batch is detectable and skippable (exactly-once pattern). */
@@ -98,24 +94,14 @@ object EncodeJob {
       /** Checkpoint wave: only encode pending pids < this bound, then
         * commit chunks+manifest. Repeated calls with a growing bound (or
         * None = all) give partition-granular resumability even though each
-        * parquet write commit is atomic. */
+        * parquet write commit is atomic. Waves also bound driver state:
+        * the manifest is built from per-pid accumulator summaries, so the
+        * driver holds O(#pids in this wave) of them. */
       pidUpperBound: Option[Int] = None,
       /** "auto" = stats-driven selector (the engine); "fl" = FL bit-pack
         * only, the exact work of the reference CPU path, for
         * apples-to-apples throughput comparison. */
       codecMode: String = "auto",
-      /** How manifest rows are derived after the chunk write.
-        * "acc" (default): from the kernel's per-pid accumulator summaries
-        * — zero extra jobs, but the driver holds O(#pids-this-run) state
-        * (~0.5-1 GB at 800k pids; bounded per wave when `pidUpperBound`
-        * waves are used).
-        * "scan": a distributed aggregation over the chunk table's
-        * METADATA columns (leaf-pruned — payload bytes never read),
-        * written straight to the manifest with NO driver materialization
-        * — O(1) driver state regardless of #pids; costs one extra small
-        * job. Use for single-pass encodes too large for the accumulator.
-        * Both modes produce identical manifests (spec-asserted). */
-      manifestMode: String = "acc",
       /** When false, skip the end-of-run whole-manifest totals
         * aggregation and report THIS RUN's totals in Result.rows/
         * rawBytes/encBytes/flBaselineBytes (pidsEncoded = pids committed
@@ -177,13 +163,10 @@ object EncodeJob {
 
   /** Upper-exclusive cut points; pid = #bounds <= url (binary search).
     * Comparison is UTF-8 BINARY order — the one ordering used everywhere
-    * (kernel sort, manifest min/max merge, decode range filter). Java
+    * (kernel sort, manifest url range, decode range filter). Java
     * String order (UTF-16 code units) disagrees for supplementary-plane
     * characters, which would make adjacent pids' manifest url ranges
     * overlap and weaken chunk-level range pruning. */
-  def pidOf(bounds: Array[String], url: String): Int =
-    pidOfBytes(bounds.map(_.getBytes(UTF_8)), url.getBytes(UTF_8))
-
   private[jobs] def pidOfBytes(bounds: Array[Array[Byte]], url: Array[Byte]): Int = {
     var lo = 0
     var hi = bounds.length // pid range is [0, bounds.length]
@@ -194,8 +177,15 @@ object EncodeJob {
     lo
   }
 
-  private val Utf8Ordering: Ordering[String] =
-    (a: String, b: String) => utf8Compare(a, b)
+  /** Streaming pin guard: with `resume = false` (the streaming front
+    * end), bounds.json is pinned only once a sample has seen at least
+    * this many rows per partition, so a tiny first micro-batch cannot
+    * freeze unrepresentative url bounds for every later batch. A
+    * resumable batch run always pins computed bounds, because
+    * re-deriving them after a crash is only identical under an identical
+    * input scan partitioning — file-split changes between runs would
+    * silently shift pid assignment against the completed-pid set. */
+  private val BoundsPinRowsPerPartition = 16L
 
   /** One merge group per ~this many scan partitions: the driver then
     * holds O(scanPartitions / GroupSpan) merged reservoirs instead of one
@@ -220,16 +210,17 @@ object EncodeJob {
       parseJsonStringArray(TableIO.readTextFile(spark, boundsPath(outDir)))
     } else {
       import spark.implicits._
-      val k = math.max(64, cfg.seedSampleSize / 16) // per-partition reservoir
+      val k = 625 // per-partition url reservoir
       // merged-per-group reservoir: 4096 samples per 1024-partition group
       // keeps total samples ~4x the scan partition count, which tracks
       // numPartitions (both derive from input bytes) with margin
       val mergedK = math.max(k, 4096)
-      val perPart: Array[(Long, Array[String])] = input.select($"url").as[String]
+      val perPart: Array[(Long, Array[Array[Byte]])] =
+        input.select($"url".cast("binary")).as[Array[Byte]]
         .mapPartitions { it =>
           val pid = org.apache.spark.TaskContext.getPartitionId()
           val rnd = new java.util.Random(42L + pid)
-          val res = new Array[String](k)
+          val res = new Array[Array[Byte]](k)
           var n = 0L
           while (it.hasNext) {
             val u = it.next()
@@ -255,8 +246,8 @@ object EncodeJob {
           val rnd = new java.util.Random(7L * (group + 1))
           // A-Res weighted reservoir: each sampled url stands for
           // n_i/|sample_i| rows; keep the mergedK highest rand^(1/w) keys
-          val heap = new java.util.PriorityQueue[(Double, String)](
-            math.max(1, mergedK), Ordering.by((e: (Double, String)) => e._1))
+          val heap = new java.util.PriorityQueue[(Double, Array[Byte])](
+            math.max(1, mergedK), Ordering.by((e: (Double, Array[Byte])) => e._1))
           sorted.foreach { case (_, _, n, arr) =>
             if (arr.nonEmpty) {
               val w = n.toDouble / arr.length
@@ -267,7 +258,7 @@ object EncodeJob {
               }
             }
           }
-          val merged = new Array[String](heap.size)
+          val merged = new Array[Array[Byte]](heap.size)
           var i = merged.length - 1
           while (i >= 0) { merged(i) = heap.poll()._2; i -= 1 }
           (total, merged)
@@ -277,14 +268,7 @@ object EncodeJob {
       val weighted = perPart.filter(_._2.nonEmpty).flatMap { case (cnt, arr) =>
         val w = cnt.toDouble / arr.length
         arr.map(u => (u, w))
-      }
-        // encode each url ONCE and sort byte arrays: Utf8Ordering's
-        // comparator re-encodes BOTH strings per comparison, which at
-        // the 100 TB sample count (~millions of urls) is ~2·n·log n
-        // transient encodings in the single-threaded driver section
-        .map { case (u, w) => (u.getBytes(UTF_8), u, w) }
-        .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0)
-        .map { case (_, u, w) => (u, w) }
+      }.sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0)
       // can't cut finer than the sample supports: with fewer samples than
       // requested partitions (an unsplittable giant file, sample caps),
       // derive as many equi-weight pids as the samples allow instead of
@@ -302,26 +286,21 @@ object EncodeJob {
         if (effParts <= 1) Array.empty[String]
         else {
           val step = weighted.map(_._2).sum / effParts
-          val out = scala.collection.mutable.ArrayBuffer.empty[String]
+          val out = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
           var acc = 0.0
           var next = step
           weighted.foreach { case (u, w) =>
             acc += w
             while (acc >= next && out.length < effParts - 1) { out += u; next += step }
           }
-          out.toArray.distinct
+          out.toArray.map(new String(_, UTF_8)).distinct
         }
       val sampledRows = perPart.map(_._1).sum
       // never pin EMPTY bounds: an empty/tiny first run would otherwise
       // freeze "everything is pid 0" for all later (larger) runs into the
       // same outDir; empty bounds are trivially re-derivable anyway.
-      // The min-rows pin guard applies to STREAMING use only (resume =
-      // false inside foreachBatch): a resumable batch run must always pin,
-      // because "unpinned runs deterministically re-derive identical
-      // bounds" holds only under an identical input scan partitioning —
-      // a resume after a crash with different file splits would otherwise
-      // assign pids inconsistent with the completed-pid set.
-      if ((cfg.resume || sampledRows >= cfg.boundsPinMinRows) && bounds.nonEmpty)
+      if ((cfg.resume || sampledRows >= BoundsPinRowsPerPartition * cfg.numPartitions) &&
+          bounds.nonEmpty)
         // the ONE hand-emitted-JSON escaper (named escapes instead of the
         // old private \uXXXX variant — parseJsonStringArray accepts both)
         TableIO.writeTextFile(spark, boundsPath(outDir),
@@ -440,16 +419,18 @@ object EncodeJob {
     // a typed .map here would materialize every html/text payload as JVM
     // objects on the map side just to re-serialize them for the shuffle
     val boundsBytesBc = spark.sparkContext.broadcast(bounds.map(_.getBytes(UTF_8)))
-    val assignPid = udf { (url: String) =>
+    val assignPid = udf { (url: Array[Byte]) =>
       // named failure at the FIRST touch of the key: url has no null
       // representation (range/sort key); html/text/lang nulls are
       // legitimate null rows handled by the codec bitmaps
       require(url != null, "graft encode: null url — urls are the range key and must be non-null")
-      pidOfBytes(boundsBytesBc.value, url.getBytes(UTF_8))
+      pidOfBytes(boundsBytesBc.value, url)
     }
     val isPending = udf((pid: Int) => !completedBc.value.contains(pid) && pid < pidCap)
+    // validate_utf8 fails the map stage (INVALID_UTF8_STRING) before any
+    // chunk is written: the url range key becomes String chunk bounds
     val withPid = input.toDF()
-      .withColumn("pid", assignPid($"url"))
+      .withColumn("pid", assignPid(validate_utf8($"url").cast("binary")))
       .filter(isPending($"pid"))
 
     val targetBytes = cfg.targetBlockBytes
@@ -459,12 +440,6 @@ object EncodeJob {
     // row will carry, so a crash between the two commits is reconcilable
     // under the original attempt identity
     val attemptId = cfg.attemptId.getOrElse(java.util.UUID.randomUUID().toString)
-    val useScanManifest = cfg.manifestMode match {
-      case "scan" => true
-      case "acc"  => false
-      case other  => throw new IllegalArgumentException(
-        s"manifestMode must be 'acc' or 'scan', got '$other'")
-    }
     val summaryAcc = spark.sparkContext.collectionAccumulator[PidSummary]("graft.pidSummaries")
     // Hash repartition on the (already range-derived) pid, WITHOUT the
     // extra sampling pass a repartitionByRange would run over the whole
@@ -483,22 +458,19 @@ object EncodeJob {
     // differently and the manifest twin-agreement assert would fire on a
     // benign reorder. With the tiebreaker, every attempt encodes
     // byte-identical chunks regardless of upstream row order.
+    // The sort and its tiebreaker run on the ORIGINAL columns; the binary
+    // cast after it hands the kernel the exact stored UTF-8 bytes (Spark
+    // strings compare as unsigned bytes, so the sort order is the byte
+    // order the manifest and the decode range filter use).
     val chunks = withPid
       .repartition(cfg.numPartitions, $"pid")
       .sortWithinPartitions($"pid", $"url", xxhash64($"warc_ts", $"text", $"html"))
+      .select($"pid", $"url".cast("binary").as("url"), $"warc_ts", $"html",
+        $"text".cast("binary").as("text"), $"lang".cast("binary").as("lang"))
       .as[PidPage]
-      .mapPartitions { it =>
-        val inner = encodePartition(it, targetBytes, maxRows, flOnly, attemptId)
-        if (useScanManifest) inner else summarizing(inner, summaryAcc)
-      }
+      .mapPartitions(it =>
+        summarizing(encodePartition(it, targetBytes, maxRows, flOnly, attemptId), summaryAcc))
 
-    // Chunk payloads are ALREADY compressed by the codec layer, so a file-
-    // level codec on top buys ~nothing on the dominant binary leaves and
-    // costs CPU on a write-bound pipeline (BENCH.md: writes are ~70% of the
-    // 32-core encode wall). Default uncompressed; override via conf for
-    // tables whose payloads are mostly plain.
-    val chunkCompression = spark.conf.getOption("spark.graft.chunks.compression")
-      .getOrElse("uncompressed")
     // attempt lineage markers (see [[attemptsDir]]): begin- before the
     // chunk job, chunks- after its commit, both removed after the manifest
     // commit — every crash window identifies itself by which markers
@@ -512,8 +484,12 @@ object EncodeJob {
         !TableIO.exists(spark, chunksDir(outDir)))
       TableIO.touch(spark, migratedMarker(outDir))
     TableIO.touch(spark, s"${attemptsDir(outDir)}/begin-$attemptId")
+    // Chunk payloads are ALREADY compressed by the codec layer, so a file-
+    // level codec on top buys ~nothing on the dominant binary leaves and
+    // costs CPU on a write-bound pipeline (BENCH.md: writes are ~70% of the
+    // 32-core encode wall).
     TableIO.write(chunks.toDF(), chunksDir(outDir), SaveMode.Append,
-      Map("compression" -> chunkCompression))
+      Map("compression" -> "uncompressed"))
     TableIO.touch(spark, s"${attemptsDir(outDir)}/chunks-$attemptId")
     val tEncode = System.nanoTime()
 
@@ -527,62 +503,31 @@ object EncodeJob {
     // divergence (two attempts that encoded different data) fails loudly
     // instead of being masked by an arbitrary pick.
     val finishedAt = System.currentTimeMillis()
+    val manifestRows = {
+      import scala.jdk.CollectionConverters._
+      summaryAcc.value.asScala
+        .groupBy(_.pid).map { case (pid, twins) =>
+          val agree = twins.forall(t =>
+            t.blocks == twins.head.blocks && t.rows == twins.head.rows &&
+              t.encBytes == twins.head.encBytes && t.textCrc32Xor == twins.head.textCrc32Xor)
+          require(agree, s"pid $pid: twin task attempts produced DIFFERENT summaries " +
+            s"(${twins.map(t => (t.blocks, t.rows, t.encBytes)).toSet}) — non-deterministic encode?")
+          twins.minBy(_.encodeNanos) // deterministic pick among agreeing twins
+        }
+        .toSeq.sortBy(_.pid)
+        .map(s => PartitionManifest(
+          s.pid, s.blocks, s.rows, s.urlMin, s.urlMax, s.rawBytes, s.encBytes,
+          s.flBaselineBytes, s.encodeNanos, s.textCrc32Xor,
+          s.codecs.map { case (c, set) => c -> set.toSeq.sorted.mkString("|") },
+          attemptId, finishedAt))
+    }
+    if (manifestRows.nonEmpty)
+      TableIO.write(spark.createDataset(manifestRows).toDF(), manifestDir(outDir), SaveMode.Append)
     // (pids, rows, rawBytes, encBytes, flBaselineBytes) committed by
     // THIS invocation, for Result
-    var thisRun = (0L, 0L, 0L, 0L, 0L)
-    if (useScanManifest) {
-      // distributed derivation: aggregate this attempt's chunk METADATA
-      // columns (leaf-pruned scan — payload bytes never read) straight
-      // into manifest rows and write them as a DataFrame; nothing O(#pids)
-      // ever reaches the driver. Twin-attempt divergence can't arise here:
-      // the aggregation reads only the chunk files the output committer
-      // actually committed.
-      val cur = chunkMetaScan(spark, outDir).filter($"attemptId" === attemptId)
-      // pidUpperBound waves may share an attemptId: skip pids this attempt
-      // already committed in an earlier wave
-      val rowsDf = {
-        val fresh = manifestRowsFromChunks(spark, cur, finishedAt)
-        if (!TableIO.exists(spark, manifestDir(outDir))) fresh
-        else fresh.join(
-          manifestScan(spark, outDir)
-            .filter($"attemptId" === attemptId).select($"pid"),
-          Seq("pid"), "left_anti")
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val agg = rowsDf.agg(count(lit(1)), sum($"rows"), sum($"rawBytes"), sum($"encBytes"),
-          sum($"flBaselineBytes"))
-        .as[(Long, Option[Long], Option[Long], Option[Long], Option[Long])].head()
-      // guard the empty case: appending zero rows would still create the
-      // manifest dir, breaking exists()-based guards downstream
-      if (agg._1 > 0L)
-        TableIO.write(rowsDf, manifestDir(outDir), SaveMode.Append)
-      rowsDf.unpersist()
-      thisRun = (agg._1, agg._2.getOrElse(0L), agg._3.getOrElse(0L), agg._4.getOrElse(0L),
-        agg._5.getOrElse(0L))
-    } else {
-      val manifestRows = {
-        import scala.jdk.CollectionConverters._
-        summaryAcc.value.asScala
-          .groupBy(_.pid).map { case (pid, twins) =>
-            val agree = twins.forall(t =>
-              t.blocks == twins.head.blocks && t.rows == twins.head.rows &&
-                t.encBytes == twins.head.encBytes && t.textCrc32Xor == twins.head.textCrc32Xor)
-            require(agree, s"pid $pid: twin task attempts produced DIFFERENT summaries " +
-              s"(${twins.map(t => (t.blocks, t.rows, t.encBytes)).toSet}) — non-deterministic encode?")
-            twins.minBy(_.encodeNanos) // deterministic pick among agreeing twins
-          }
-          .toSeq.sortBy(_.pid)
-          .map(s => PartitionManifest(
-            s.pid, s.blocks, s.rows, s.urlMin, s.urlMax, s.rawBytes, s.encBytes,
-            s.flBaselineBytes, s.encodeNanos, s.textCrc32Xor,
-            s.codecs.map { case (c, set) => c -> set.toSeq.sorted.mkString("|") },
-            attemptId, finishedAt))
-      }
-      if (manifestRows.nonEmpty)
-        TableIO.write(spark.createDataset(manifestRows).toDF(), manifestDir(outDir), SaveMode.Append)
-      thisRun = (manifestRows.length.toLong, manifestRows.map(_.rows).sum,
-        manifestRows.map(_.rawBytes).sum, manifestRows.map(_.encBytes).sum,
-        manifestRows.map(_.flBaselineBytes).sum)
-    }
+    val thisRun = (manifestRows.length.toLong, manifestRows.map(_.rows).sum,
+      manifestRows.map(_.rawBytes).sum, manifestRows.map(_.encBytes).sum,
+      manifestRows.map(_.flBaselineBytes).sum)
     // attempt fully committed: clear its markers (see [[attemptsDir]])
     TableIO.delete(spark, s"${attemptsDir(outDir)}/begin-$attemptId")
     TableIO.delete(spark, s"${attemptsDir(outDir)}/chunks-$attemptId")
@@ -627,9 +572,6 @@ object EncodeJob {
       encBytesThisRun = thisRun._4)
   }
 
-  private def utf8Compare(a: String, b: String): Int =
-    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
-
   /** Explicit-schema METADATA scan of the chunk table: only the columns a
     * caller selects are ever read (each encoded column is a top-level
     * struct leaf), so payload bytes stay on disk. */
@@ -651,13 +593,12 @@ object EncodeJob {
       .schema(org.apache.spark.sql.Encoders.product[PartitionManifest].schema)
       .format(TableIO.format(spark)).load(manifestDir(outDir))
 
-  /** Distributed manifest derivation: one manifest row per
-    * (pid, attemptId), aggregated from chunk metadata columns with no
-    * driver materialization. url min/max merge over the UTF-8 BYTES
-    * (BinaryType comparison is unsigned lexicographic) — the same
-    * ordering the kernel sort, the accumulator merge and the decode range
-    * filter use; a String min/max (UTF-16 code units) would disagree on
-    * supplementary-plane characters. */
+  /** Manifest rows rebuilt from chunk metadata by the reconcile paths:
+    * one row per (pid, attemptId), aggregated with no driver
+    * materialization. url min/max merge over the UTF-8 BYTES (BinaryType
+    * comparison is unsigned lexicographic) — the same ordering the kernel
+    * sort and the decode range filter use; a String min/max (UTF-16 code
+    * units) would disagree on supplementary-plane characters. */
   private def manifestRowsFromChunks(
       spark: SparkSession,
       chunkMeta: org.apache.spark.sql.DataFrame,
@@ -857,7 +798,10 @@ object EncodeJob {
 
   /** Pass-through iterator that folds every produced chunk into per-pid
     * summaries and flushes them to the accumulator exactly once, when the
-    * kernel is exhausted (i.e. when the task has produced all its rows). */
+    * kernel is exhausted (i.e. when the task has produced all its rows).
+    * A task emits each pid's chunks in url-byte order (the kernel input
+    * is sorted by (pid, url)), so the pid's url range is its first
+    * chunk's urlMin and its last chunk's urlMax. */
   private def summarizing(
       inner: Iterator[EncodedChunk],
       acc: org.apache.spark.util.CollectionAccumulator[PidSummary]): Iterator[EncodedChunk] =
@@ -876,12 +820,7 @@ object EncodeJob {
           case None => PidSummary(c.pid, 1L, c.rows, c.urlMin, c.urlMax, c.rawBytes,
             c.encBytes, c.flBaselineBytes, c.encodeNanos, c.textCrc32, cCodecs)
           case Some(s) => PidSummary(c.pid, s.blocks + 1, s.rows + c.rows,
-            // UTF-8 binary order — the SAME ordering the kernel's sort and
-            // the decode range filter use; Java String (UTF-16 code unit)
-            // order disagrees for supplementary-plane characters
-            if (utf8Compare(s.urlMin, c.urlMin) <= 0) s.urlMin else c.urlMin,
-            if (utf8Compare(s.urlMax, c.urlMax) >= 0) s.urlMax else c.urlMax,
-            s.rawBytes + c.rawBytes, s.encBytes + c.encBytes,
+            s.urlMin, c.urlMax, s.rawBytes + c.rawBytes, s.encBytes + c.encBytes,
             s.flBaselineBytes + c.flBaselineBytes, s.encodeNanos + c.encodeNanos,
             s.textCrc32Xor ^ c.textCrc32,
             cCodecs.foldLeft(s.codecs) { case (m, (k, v)) =>
@@ -912,14 +851,9 @@ object EncodeJob {
         var cut = false
         while (!cut && pending != null && pending.pid == pid) {
           buf += pending
-          // UTF-8 byte estimate, not String.length: a CJK-heavy text is
-          // 3 bytes/char, and counting chars would let a "16 MB" chunk
-          // hold ~48 MB of payload — past the memory the block caps
-          // exist to bound. (Identical to length on ASCII, so chunk
-          // cuts — and encBytes — are unchanged for ASCII corpora.)
-          // html/text/lang may be null (encoded as null-bitmap rows).
-          bufBytes += (if (pending.html == null) 0L else pending.html.length.toLong) +
-            utf8Len(pending.text) + utf8Len(pending.url) + 16
+          // payload byte budget: html + text + url bytes (a null is a
+          // null-bitmap row and carries no payload) + 16 per row
+          bufBytes += len(pending.html) + len(pending.text) + len(pending.url) + 16
           pending = if (it.hasNext) it.next() else null
           cut = buf.length >= maxBlockRows || bufBytes >= targetBlockBytes
         }
@@ -930,28 +864,7 @@ object EncodeJob {
     }
   }
 
-  /** UTF-8 byte length without materializing the bytes (null = 0 — a
-    * null-bitmap row contributes no payload). Exact for well-formed
-    * UTF-16; an UNPAIRED surrogate is counted as 3 bytes while
-    * `String.getBytes(UTF_8)` replaces it with 1-byte '?', so on
-    * malformed input the count overestimates — the safe direction for
-    * the chunk byte budget in [[encodePartition]] (chunks can only come
-    * out smaller than the target, never larger). */
-  private def utf8Len(s: String): Long = {
-    if (s == null) return 0L
-    var n = 0L
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c < 0x80) n += 1
-      else if (c < 0x800) n += 2
-      else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
-        Character.isLowSurrogate(s.charAt(i + 1))) { n += 4; i += 1 }
-      else n += 3
-      i += 1
-    }
-    n
-  }
+  private def len(b: Array[Byte]): Long = if (b == null) 0L else b.length.toLong
 
   def encodeChunk(pid: Int, blockIdx: Int, rows: Array[PidPage],
                   flOnly: Boolean = false, attemptId: String = null): EncodedChunk = {
@@ -964,28 +877,26 @@ object EncodeJob {
     require(rows.forall(_.url != null),
       s"chunk pid=$pid blockIdx=$blockIdx: null url — urls are the range key " +
         "and must be non-null")
-    val urls = rows.map(_.url.getBytes(UTF_8))
-    val texts = rows.map(r => if (r.text == null) null else r.text.getBytes(UTF_8))
-    val htmls = rows.map(_.html)
-    val langsB = rows.map(r => if (r.lang == null) null else r.lang.getBytes(UTF_8))
+    val texts = rows.map(_.text)
     val tsNulls = if (rows.exists(_.warc_ts == null)) rows.map(_.warc_ts == null) else null
     val tsMicros = rows.map { r =>
       val ts = r.warc_ts
       if (ts == null) 0L else graft.model.TsMicros.micros(ts)
     }
 
-    // null texts are SKIPPED — the decode-side lineage check
-    // (GraftPartitionReader.requireTextCrc) skips null rows the same way
+    // over the exact stored bytes; null texts are SKIPPED — the
+    // decode-side lineage check (GraftPartitionReader.requireTextCrc)
+    // skips null rows the same way
     val crc = new CRC32()
     texts.foreach(t => if (t != null) crc.update(t))
 
     def asCol(name: String, e: ColumnCodec.Encoded) =
       EncodedColumn(name, e.codecName, e.bytes, e.rawBytes, e.bytes.length.toLong, e.flBaselineBytes)
-    val colUrl = asCol("url", ColumnCodec.encodeBytes(urls, flOnly))
+    val colUrl = asCol("url", ColumnCodec.encodeBytes(rows.map(_.url), flOnly))
     val colTs = asCol("warc_ts", ColumnCodec.encodeLongs(tsMicros, tsNulls, flOnly))
-    val colHtml = asCol("html", ColumnCodec.encodeBytes(htmls, flOnly))
+    val colHtml = asCol("html", ColumnCodec.encodeBytes(rows.map(_.html), flOnly))
     val colText = asCol("text", ColumnCodec.encodeBytes(texts, flOnly))
-    val colLang = asCol("lang", ColumnCodec.encodeBytes(langsB, flOnly))
+    val colLang = asCol("lang", ColumnCodec.encodeBytes(rows.map(_.lang), flOnly))
     val cols = Seq(colUrl, colTs, colHtml, colText, colLang)
     // (tsMin, tsMax) over NON-null ts only — the DSv2 time-range skip's
     // chunk statistics (None = all-null chunk, prunable under any ts
@@ -1003,7 +914,7 @@ object EncodeJob {
     val tsStats = if (tsMin > tsMax) (None, None) else (Some(tsMin), Some(tsMax))
     EncodedChunk(
       pid, blockIdx, rows.length.toLong,
-      rows.head.url, rows.last.url,
+      new String(rows.head.url, UTF_8), new String(rows.last.url, UTF_8),
       cols.map(_.rawBytes).sum, cols.map(_.encBytes).sum, cols.map(_.flBaselineBytes).sum,
       System.nanoTime() - t0, crc.getValue, colUrl, colTs, colHtml, colText, colLang,
       attemptId, tsStats._1, tsStats._2)

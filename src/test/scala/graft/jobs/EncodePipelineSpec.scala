@@ -367,14 +367,12 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     assert(perCol("html")._4 < perCol("html")._3)
   }
 
-  test("manifestMode=scan produces the same manifest as the accumulator, O(1) driver state") {
+  test("manifest url ranges equal the byte-order merge of each pid's chunks") {
     import spark.implicits._
-    val accDir = tmpDir("graft-macc")
-    val scanDir = tmpDir("graft-mscan")
+    val outDir = tmpDir("graft-mrange")
     val ts = new java.sql.Timestamp(1700000000000L)
-    // include the supplementary-plane disagreement so the distributed
-    // min/max (binary/UTF-8) is pinned against the accumulator's
-    // utf8Compare merge, not just ASCII-lucky
+    // the two orders disagree on this pair: UTF-16 puts U+E000 last,
+    // UTF-8 bytes (EE.. vs F0..) put U+10000 last
     val uE000 = "https://x/\uE000zz"
     val uSupp = "https://x/" + new String(Character.toChars(0x10000)) + "aa"
     assert(uE000 > uSupp, "UTF-16 order (sanity: the two orders must disagree)")
@@ -384,28 +382,67 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     val source = WebtextGen.pages(spark, 1200L, seed = 5L)
       .union(spark.createDataset(extra)).cache()
 
-    EncodeJob.run(spark, source, accDir,
-      EncodeJob.Config(numPartitions = 5, maxBlockRows = 256, manifestMode = "acc"))
-    val rScan = EncodeJob.run(spark, source, scanDir,
-      EncodeJob.Config(numPartitions = 5, maxBlockRows = 256, manifestMode = "scan"))
-    assert(rScan.rowsThisRun == 1202L && rScan.encBytesThisRun > 0L)
-
-    // bounds sampling is seeded + pinned identically, so pids line up and
-    // the two manifests must agree on every content field (encodeNanos
-    // and finishedAt are wall-clock; attemptId is per-run)
-    def stable(dir: String) = spark.read.parquet(EncodeJob.manifestDir(dir))
-      .select($"pid", $"blocks", $"rows", $"urlMin", $"urlMax", $"rawBytes",
-        $"encBytes", $"flBaselineBytes", $"textCrc32Xor", $"codecs")
-      .orderBy($"pid")
-      .collect().map(_.toString).toSeq
-    assert(stable(scanDir) == stable(accDir))
-
-    // and the scan-mode table round-trips + resumes like any other
-    assert(VerifyJob.run(spark, source, DecodeJob.run(spark, scanDir)).ok)
-    val r2 = EncodeJob.run(spark, source, scanDir,
-      EncodeJob.Config(numPartitions = 5, maxBlockRows = 256, manifestMode = "scan"))
-    assert(r2.rowsThisRun == 0L, "scan-mode resume re-encoded completed pids")
+    // several pids, several chunks per pid: every manifest range is a
+    // merge across chunks
+    EncodeJob.run(spark, source, outDir,
+      EncodeJob.Config(numPartitions = 5, maxBlockRows = 64))
+    val manifest = spark.read.parquet(EncodeJob.manifestDir(outDir))
+      .select($"pid", $"blocks", $"urlMin", $"urlMax")
+      .as[(Int, Long, String, String)].collect().sortBy(_._1).toSeq
+    val fromChunks = spark.read.parquet(EncodeJob.chunksDir(outDir))
+      .groupBy($"pid")
+      .agg(count(lit(1)), min(encode($"urlMin", "UTF-8")), max(encode($"urlMax", "UTF-8")))
+      .as[(Int, Long, Array[Byte], Array[Byte])].collect().sortBy(_._1).toSeq
+      .map { case (p, n, lo, hi) => (p, n, new String(lo, "UTF-8"), new String(hi, "UTF-8")) }
+    assert(manifest.length > 1 && manifest.forall(_._2 > 1), manifest.mkString(","))
+    assert(manifest == fromChunks)
+    assert(manifest.last._4 == uSupp, manifest.last.toString)
+    assert(VerifyJob.run(spark, source, DecodeJob.run(spark, outDir)).ok)
     source.unpersist()
+  }
+
+  test("text and lang that are not valid UTF-8 round-trip byte-identically") {
+    import spark.implicits._
+    val outDir = tmpDir("graft-badutf8")
+    val bad = unhex(lit("C328FF")).cast("string")
+    // every 9th row gets invalid bytes in text, every 7th in lang
+    val source = WebtextGen.pages(spark, 200L, seed = 11L).toDF()
+      .withColumn("n", regexp_extract($"url", "p(\\d+)$", 1).cast("long"))
+      .withColumn("text", when($"n" % 9 === 0, concat($"text", bad)).otherwise($"text"))
+      .withColumn("lang", when($"n" % 7 === 0, bad).otherwise($"lang"))
+      .drop("n").as[graft.model.Page].cache()
+    assert(source.filter(!is_valid_utf8($"text")).count() > 0)
+
+    EncodeJob.run(spark, source, outDir, EncodeJob.Config(numPartitions = 4))
+    val decoded = DecodeJob.run(spark, outDir)
+    val report = VerifyJob.run(spark, source, decoded)
+    assert(report.ok, report.toString)
+    // and the stored bytes are the source bytes, not U+FFFD replacements
+    val badLangs = decoded.toDF().filter(!is_valid_utf8($"lang"))
+      .select(hex($"lang".cast("binary"))).as[String].collect().toSet
+    assert(badLangs == Set("C328FF"), badLangs.toString)
+    assert(decoded.toDF().filter(!is_valid_utf8($"text")).count() ==
+      source.toDF().filter(!is_valid_utf8($"text")).count())
+    source.unpersist()
+  }
+
+  test("a url that is not valid UTF-8 fails the encode named, before any commit") {
+    import spark.implicits._
+    val outDir = tmpDir("graft-badurl")
+    val source = WebtextGen.pages(spark, 100L, seed = 12L).toDF()
+      .withColumn("url", when($"url".endsWith("7"),
+        concat($"url", unhex(lit("C328FF")).cast("string"))).otherwise($"url"))
+      .as[graft.model.Page]
+    val err = intercept[Exception] {
+      EncodeJob.run(spark, source, outDir, EncodeJob.Config(numPartitions = 2))
+    }
+    def chain(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ chain(e.getCause))
+    assert(chain(err).exists(_.contains("INVALID_UTF8_STRING")), chain(err).mkString(" | "))
+    // no chunk file and no manifest row was committed
+    assert(!graft.sources.TableIO.exists(spark, EncodeJob.manifestDir(outDir)))
+    assert(!graft.sources.TableIO.exists(spark, EncodeJob.chunksDir(outDir)) ||
+      EncodeJob.chunkMetaScan(spark, outDir).isEmpty)
   }
 
   test("steady-state reconcile runs zero Spark jobs (marker fast path)") {
