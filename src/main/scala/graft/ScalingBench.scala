@@ -48,8 +48,6 @@ object ScalingBench {
       effPrimary: Double,   // local[2] -> local[8]
       effSecondary: Double, // local[8] -> local[32]
       hwCeiling: Double,    // pure-CPU (T8/T32)/4 on this box
-      flOnly: LevelResult,  // reference-equivalent FL-only mode at local[32]
-      flOnlyEncBytes: Long,
       decodeSec: Double,     // steady-state: best of 2 after a warm pass
       decodeGbps: Double,
       decodeColdSec: Double, // first pass in the fresh session (JIT cold)
@@ -104,8 +102,7 @@ object ScalingBench {
     * does not have (and so understates scaling efficiency). Returns the
     * child's one-line JSON parsed into a LevelResult plus size fields. */
   private def runLevelIsolated(pagesPath: String, work: String, cpus: Int,
-                               parts: Int, reps: Int,
-                               mode: String = "auto"): (LevelResult, Long, Long, Long) = {
+                               parts: Int, reps: Int): (LevelResult, Long, Long, Long) = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.toArray.map(_.toString)
@@ -115,7 +112,7 @@ object ScalingBench {
     val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(
       s"-XX:ActiveProcessorCount=$cpus",
       "-cp", System.getProperty("java.class.path"),
-      "graft.ScalingLevel", pagesPath, work, cpus.toString, parts.toString, reps.toString, mode)
+      "graft.ScalingLevel", pagesPath, work, cpus.toString, parts.toString, reps.toString)
     val pb = new ProcessBuilder(cmd: _*)
     // child stderr (Spark logs + [level] lines) flows straight through;
     // only the one-line stdout JSON is captured (avoids pipe deadlock)
@@ -152,39 +149,31 @@ object ScalingBench {
     }
 
     // -------- measured levels: fresh JVM per (round, level); the levels
-    // (including the FL-only reference-equivalent run) are ROUND-ROBINED
-    // across rounds so a host load spike (this shared box gets external
-    // neighbors at loadavg 10+) cannot sit inside all of one level's
-    // reps — back-to-back reps give correlated noise that best-of-N
-    // cannot remove. Best per level across rounds is kept.
+    // are ROUND-ROBINED across rounds so a host load spike (this shared
+    // box gets external neighbors at loadavg 10+) cannot sit inside all
+    // of one level's reps — back-to-back reps give correlated noise that
+    // best-of-N cannot remove. Best per level across rounds is kept.
     // 2 and 8 are the published efficiency pairs: their absence would make
     // wall() return NaN, which flows into bench_scaling.json as the
     // literal NaN — invalid JSON that breaks every downstream consumer
     require(Seq(2, 8, 32).forall(cpuLevels.contains),
-      s"cpuLevels must include 2, 8 and 32 (efficiency pairs + sizes/fl-only key off them), got $cpuLevels")
-    val specs: Seq[(Int, String)] = cpuLevels.map(c => (c, "auto")) :+ ((32, "fl"))
-    var best = Map.empty[(Int, String), (LevelResult, Long, Long, Long)]
+      s"cpuLevels must include 2, 8 and 32 (efficiency pairs + sizes key off them), got $cpuLevels")
+    var best = Map.empty[Int, (LevelResult, Long, Long, Long)]
     (1 to reps).foreach { round =>
-      specs.foreach { case (cpus, mode) =>
-        val r = runLevelIsolated(pagesPath, work, cpus, parts, reps = 1, mode)
-        println(f"[scaling] round $round local[$cpus] $mode: wall ${r._1.wallSec}%.2f s, ${r._1.gbps}%.4f GB/s")
-        val k = (cpus, mode)
-        if (!best.contains(k) || r._1.wallSec < best(k)._1.wallSec) best += k -> r
+      cpuLevels.foreach { cpus =>
+        val r = runLevelIsolated(pagesPath, work, cpus, parts, reps = 1)
+        println(f"[scaling] round $round local[$cpus]: wall ${r._1.wallSec}%.2f s, ${r._1.gbps}%.4f GB/s")
+        if (!best.contains(cpus) || r._1.wallSec < best(cpus)._1.wallSec) best += cpus -> r
       }
     }
-    val lvl = cpuLevels.map(c => best((c, "auto"))._1)
-    specs.foreach { case k @ (c, m) =>
-      println(f"[scaling] local[$c] $m best: wall ${best(k)._1.wallSec}%.2f s, ${best(k)._1.gbps}%.4f GB/s")
+    val lvl = cpuLevels.map(c => best(c)._1)
+    lvl.foreach { l =>
+      println(f"[scaling] local[${l.cpus}] best: wall ${l.wallSec}%.2f s, ${l.gbps}%.4f GB/s")
     }
-    val (_, rawB, encB, flB) = best((32, "auto"))
+    val (_, rawB, encB, flB) = best(32)
     def wall(c: Int): Double = lvl.find(_.cpus == c).map(_.wallSec).getOrElse(Double.NaN)
     val effPrimary = (wall(2) / wall(8)) / 4.0
     val effSecondary = (wall(8) / wall(32)) / 4.0
-
-    // reference-equivalent FL-only mode: same pipeline, codec fixed to the
-    // reference's FL bit-pack — the apples-to-apples throughput number
-    // (the reference repo published none; this is the comparable we emit)
-    val (flLvl, _, flEncB, _) = best((32, "fl"))
 
     println("[scaling] measuring pure-CPU hardware ceiling (8 vs 32 threads)...")
     val ceiling = hardwareCeiling()
@@ -216,7 +205,7 @@ object ScalingBench {
     }
 
     ScalingResult(nDocs, rawB, encB, flB,
-      lvl, effPrimary, effSecondary, ceiling, flLvl, flEncB,
+      lvl, effPrimary, effSecondary, ceiling,
       decodeSec, decodeGbps, decodeColdSec, verifyOk)
   }
 
@@ -235,18 +224,6 @@ object ScalingBench {
     sb.append(f"- decode (local[32]): ${r.decodeSec}%.2f s steady-state (best-of-2 after a\n")
     sb.append(f"  warm pass), ${r.decodeGbps}%.3f GB/s raw-equivalent; first cold pass in the\n")
     sb.append(f"  fresh session: ${r.decodeColdSec}%.2f s (scan-path JIT + session spin-up)\n")
-    sb.append(f"- FL-only mode (reference-equivalent work, local[32]): ${r.flOnly.gbps}%.3f GB/s at ")
-    sb.append(f"ratio ${r.flOnlyEncBytes.toDouble / math.max(1L, r.rawBytes)}%.4f; the full selector's output is ")
-    sb.append(f"${(1 - r.encBytes.toDouble / math.max(1L, r.flOnlyEncBytes)) * 100}%.0f%% smaller")
-    // compare against the local[32] level by KEY, not by position: run()
-    // only validates that cpuLevels CONTAINS {2,8,32}, so levels.last may
-    // be some other level under a reordered/extended cpuLevels — and the
-    // FL-only run this line compares against is always local[32]
-    val l32 = r.levels.find(_.cpus == 32).getOrElse(r.levels.last)
-    if (l32.gbps >= r.flOnly.gbps)
-      sb.append(" AND it is faster end-to-end (less to write on a write-bound pipeline)\n")
-    else
-      sb.append(f" at ${(1 - l32.gbps / r.flOnly.gbps) * 100}%.0f%% lower throughput\n")
     sb.append(s"- round-trip verify (byte-identical per url): ${if (r.verifyOk) "PASS" else "FAIL"}\n\n")
     sb.append("| level | cores | encode wall s | encode-phase s | GB/s (raw/wall) |\n")
     sb.append("|---|---|---|---|---|\n")
@@ -277,7 +254,7 @@ object ScalingBench {
     // lines, so when it was measured must be visible, not implied
     val stamp = java.time.Instant.now().toString
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    s"""{"generatedAtIso":"$stamp","runId":"$runId","nDocs":${r.nDocs},"rawBytes":${r.rawBytes},"encBytes":${r.encBytes},"flBaselineBytes":${r.flBaselineBytes},"ratio":${n(r.ratio, 4)},"ratioVsFl":${n(r.ratioVsFl, 4)},"levels":$levels,"scalingEfficiency":${n(r.effPrimary, 3)},"scalingEfficiency8to32":${n(r.effSecondary, 3)},"hardwareCeiling8to32":${n(r.hwCeiling, 3)},"flOnlyGbps":${n(r.flOnly.gbps, 4)},"flOnlyRatio":${n(r.flOnlyEncBytes.toDouble / math.max(1L, r.rawBytes), 4)},"decodeGbps":${n(r.decodeGbps, 4)},"decodeColdSec":${n(r.decodeColdSec, 3)},"verifyOk":${r.verifyOk}}"""
+    s"""{"generatedAtIso":"$stamp","runId":"$runId","nDocs":${r.nDocs},"rawBytes":${r.rawBytes},"encBytes":${r.encBytes},"flBaselineBytes":${r.flBaselineBytes},"ratio":${n(r.ratio, 4)},"ratioVsFl":${n(r.ratioVsFl, 4)},"levels":$levels,"scalingEfficiency":${n(r.effPrimary, 3)},"scalingEfficiency8to32":${n(r.effSecondary, 3)},"hardwareCeiling8to32":${n(r.hwCeiling, 3)},"decodeGbps":${n(r.decodeGbps, 4)},"decodeColdSec":${n(r.decodeColdSec, 3)},"verifyOk":${r.verifyOk}}"""
   }
 
   def main(args: Array[String]): Unit = {

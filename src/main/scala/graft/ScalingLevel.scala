@@ -37,7 +37,7 @@ object ScalingLevel {
         if (!java.nio.file.Files.isSymbolicLink(f.toPath) && f.isDirectory) f.listFiles()
         else null
       // null-safe: listFiles() returns null for unreadable or
-      // concurrently-vanishing dirs (same contract as SparkFixture.rmrf)
+      // concurrently-vanishing dirs
       if (children != null) children.foreach(rec)
       f.delete()
     }
@@ -47,8 +47,7 @@ object ScalingLevel {
   def main(args: Array[String]): Unit = {
     val Array(pagesPath, work, cpusS, partsS, repsS) = args.take(5)
     val (cpus, parts, reps) = (cpusS.toInt, partsS.toInt, repsS.toInt)
-    val mode = args.lift(5).getOrElse("auto") // "auto" | "fl"
-    val encDir = if (mode == "auto") s"$work/enc_$cpus" else s"$work/enc_${cpus}_$mode"
+    val encDir = s"$work/enc_$cpus"
 
     val spark = session(cpus, parts)
     import spark.implicits._
@@ -60,7 +59,7 @@ object ScalingLevel {
     val n = input.count()
     // Long-safe: a bare (n / 10).toInt wraps for corpora past ~21.4B rows
     EncodeJob.run(spark, input.limit(math.min(n / 10, Int.MaxValue.toLong).toInt.max(1)), warmDir,
-      EncodeJob.Config(numPartitions = parts, codecMode = mode))
+      EncodeJob.Config(numPartitions = parts))
 
     // hypervisor steal makes identical runs swing up to 4x on this shared
     // VM and is INVISIBLE in loadavg — measure it per rep from /proc/stat
@@ -80,11 +79,10 @@ object ScalingLevel {
     val runs = (1 to reps).map { rep =>
       rmrf(encDir)
       val (t0, s0) = cpuStat()
-      val r = EncodeJob.run(spark, input, encDir,
-        EncodeJob.Config(numPartitions = parts, codecMode = mode))
+      val r = EncodeJob.run(spark, input, encDir, EncodeJob.Config(numPartitions = parts))
       val (t1, s1) = cpuStat()
       val stealPct = if (t1 > t0) 100.0 * (s1 - s0) / (t1 - t0) else 0.0
-      System.err.println(f"[level] local[$cpus] $mode rep$rep: wall ${r.wallNanos / 1e9}%.2f s " +
+      System.err.println(f"[level] local[$cpus] rep$rep: wall ${r.wallNanos / 1e9}%.2f s " +
         f"(bounds ${r.boundsNanos / 1e9}%.2f, encode ${r.encodeNanos / 1e9}%.2f, " +
         f"manifest ${r.manifestNanos / 1e9}%.2f, steal $stealPct%.1f%%)")
       (r, stealPct)
@@ -96,6 +94,6 @@ object ScalingLevel {
     // comma-decimal default locale would make the digit regex silently
     // read 12,345 as 12)
     val num = JsonEscape.num _
-    println(s"""{"cpus":$cpus,"wallSec":${num(best.wallNanos / 1e9, 3)},"encodeSec":${num(best.encodeNanos / 1e9, 3)},"rawBytes":${best.rawBytes},"encBytes":${best.encBytes},"flBaselineBytes":${best.flBaselineBytes},"gbps":${num(best.rawBytes / 1e9 / (best.wallNanos / 1e9), 4)},"stealPct":${num(bestSteal, 1)}}""")
+    println(s"""{"cpus":$cpus,"wallSec":${num(best.wallNanos / 1e9, 3)},"encodeSec":${num(best.encodeNanos / 1e9, 3)},"rawBytes":${best.rawBytesThisRun},"encBytes":${best.encBytesThisRun},"flBaselineBytes":${best.flBaselineBytes},"gbps":${num(best.rawBytesThisRun / 1e9 / (best.wallNanos / 1e9), 4)},"stealPct":${num(bestSteal, 1)}}""")
   }
 }

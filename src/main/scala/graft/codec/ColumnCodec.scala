@@ -165,11 +165,8 @@ object ColumnCodec {
   // --------------------------------------------------------------- longs
 
   /** Encode a long column chunk; `nulls(i)` marks null rows (may be null).
-    * Values at null positions are ignored. `flOnly` skips the selector and
-    * emits the FL-bitpack form directly — the same work the reference's
-    * CPU path does (fl_cpu.cu:9-90), for apples-to-apples throughput. */
-  def encodeLongs(values: Array[Long], nulls: Array[Boolean] = null,
-                  flOnly: Boolean = false): Encoded = {
+    * Values at null positions are ignored. */
+  def encodeLongs(values: Array[Long], nulls: Array[Boolean] = null): Encoded = {
     require(values.length <= Int.MaxValue / 8,
       s"long column chunk too large: ${values.length} values")
     val present =
@@ -189,11 +186,6 @@ object ColumnCodec {
       }
     val rawBytes = 8L * values.length
 
-    val forSize = if (flOnly) Long.MaxValue else ForLongs.sizeOf(present)
-    val rleSize = if (flOnly) Long.MaxValue else RleLongs.sizeOf(present)
-    val deltaSize = if (flOnly) Long.MaxValue else DeltaLongs.sizeOf(present)
-    val plainSize = if (flOnly) Long.MaxValue else PlainLongs.sizeOf(present)
-
     // LE byte stream only materialized if the FL form wins (it then feeds
     // FlBytes.encode); sizing is virtual — see flStreamFrames
     lazy val plainLe = longsToLeBytes(present)
@@ -206,17 +198,15 @@ object ColumnCodec {
     val bitmapBytes = if (nulls != null && nulls.exists(identity)) (values.length + 7L) / 8L else 0L
     val flBaseline = flFrames + flValueBytes + ReferenceFl.HeaderBytes + bitmapBytes
 
-    val (winner, _) =
-      if (flOnly) ("fl_plain_i64", flSize)
-      // +1 on the named codecs: their FormLong body carries a codec-id
-      // byte the fl_plain form does not — the selector must compare
-      // REALIZED body sizes or a tie goes to the one-byte-larger block
-      else Seq(
-        ForLongs.name -> (forSize + 1L),
-        RleLongs.name -> (rleSize + 1L),
-        DeltaLongs.name -> (deltaSize + 1L),
-        PlainLongs.name -> (plainSize + 1L),
-        "fl_plain_i64" -> flSize).minBy(_._2)
+    // +1 on the named codecs: their FormLong body carries a codec-id
+    // byte the fl_plain form does not — the selector must compare
+    // REALIZED body sizes or a tie goes to the one-byte-larger block
+    val (winner, _) = Seq(
+      ForLongs.name -> (ForLongs.sizeOf(present) + 1L),
+      RleLongs.name -> (RleLongs.sizeOf(present) + 1L),
+      DeltaLongs.name -> (DeltaLongs.sizeOf(present) + 1L),
+      PlainLongs.name -> (PlainLongs.sizeOf(present) + 1L),
+      "fl_plain_i64" -> flSize).minBy(_._2)
 
     val out = new ByteArrayOutputStream(64)
     writeHeader(out, values.length, nulls)
@@ -268,10 +258,8 @@ object ColumnCodec {
 
   // ------------------------------------------------------- bytes/strings
 
-  /** Encode a string/binary column chunk (null entries = null rows).
-    * `flOnly` skips the selector and emits the FL-bitpack-on-plain form
-    * directly (reference-equivalent work, see [[encodeLongs]]). */
-  def encodeBytes(values: Array[Array[Byte]], flOnly: Boolean = false): Encoded = {
+  /** Encode a string/binary column chunk (null entries = null rows). */
+  def encodeBytes(values: Array[Array[Byte]]): Encoded = {
     val n = values.length
     val nulls = if (values.exists(_ == null)) values.map(_ == null) else null
     val present = if (nulls == null) values else values.filter(_ != null)
@@ -311,7 +299,7 @@ object ColumnCodec {
     // prefix test alone would also kill a globally-repetitive column with
     // a unique HEAD (e.g. sorted input), so a triggered prefix test is
     // confirmed by a strided whole-column probe before aborting.
-    val dictCandidate: Option[(Long, Array[Array[Byte]], Array[Long], LongCodec)] = if (flOnly) None else {
+    val dictCandidate: Option[(Long, Array[Array[Byte]], Array[Long], LongCodec)] = {
       val map = new java.util.LinkedHashMap[BytesKey, Integer]()
       val codes = new Array[Long](present.length)
       var ok = true
@@ -355,17 +343,16 @@ object ColumnCodec {
     // FSST wins (training is the expensive half of the FSST path).
     // winning lengths codec chosen once and threaded to build() (no
     // duplicate O(n) sizeOf passes, no drift between two minBys)
-    val (lenCodec, lenSize) = if (flOnly) (null: LongCodec, Long.MaxValue)
-      else Seq[(LongCodec, Long)](
-        (ForLongs, ForLongs.sizeOf(lengths)),
-        (RleLongs, RleLongs.sizeOf(lengths)),
-        (DeltaLongs, DeltaLongs.sizeOf(lengths))).minBy(_._2)
+    val (lenCodec, lenSize) = Seq[(LongCodec, Long)](
+      (ForLongs, ForLongs.sizeOf(lengths)),
+      (RleLongs, RleLongs.sizeOf(lengths)),
+      (DeltaLongs, DeltaLongs.sizeOf(lengths))).minBy(_._2)
     val fsstSample: Array[Byte] =
-      if (!flOnly && payload.length >= 256) FsstBytes.sample(payload) else null
+      if (payload.length >= 256) FsstBytes.sample(payload) else null
     val fsstTable: FsstBytes.SymbolTable =
       if (fsstSample != null) FsstBytes.train(fsstSample) else null
     var fsstExact: Array[Byte] = null
-    val payloadCandidates: Seq[(String, Long)] = if (flOnly) Seq.empty else Seq(
+    val payloadCandidates: Seq[(String, Long)] = Seq(
       RleBytes.name -> RleBytes.sizeOf(payload),
       FlBytes.name -> FlBytes.sizeOf(payload),
       PlainBytes.name -> PlainBytes.sizeOf(payload),
@@ -381,21 +368,19 @@ object ColumnCodec {
           fsstExact.length.toLong
         } else FsstBytes.estimateSizeWithTable(payload, fsstSample, fsstTable)))
 
-    val candidates: Seq[(String, Long)] =
-      if (flOnly) Seq("fl_plain" -> flSize)
-      else {
-        val (bestPayloadName, bestPayloadSize) = payloadCandidates.minBy(_._2)
-        // composite body = [lenCodecId][varint lbLen][lb][pCodecId][pb]:
-        // the varint length prefix is part of the realized block, so it
-        // is part of the candidate size. Every candidate size here is
-        // exact by contract EXCEPT an FSST payload (sampled estimate) —
-        // the realized-vs-exact check after build() holds that one to
-        // the smallest-encoding promise.
-        Seq(s"$bestPayloadName+lens" ->
-            (lenSize + Varint.sizeUnsigned(lenSize) + bestPayloadSize + 2),
-          "fl_plain" -> flSize) ++
-          dictCandidate.map { case (s, _, _, _) => "dict" -> s }
-      }
+    val candidates: Seq[(String, Long)] = {
+      val (bestPayloadName, bestPayloadSize) = payloadCandidates.minBy(_._2)
+      // composite body = [lenCodecId][varint lbLen][lb][pCodecId][pb]:
+      // the varint length prefix is part of the realized block, so it
+      // is part of the candidate size. Every candidate size here is
+      // exact by contract EXCEPT an FSST payload (sampled estimate) —
+      // the realized-vs-exact check after build() holds that one to
+      // the smallest-encoding promise.
+      Seq(s"$bestPayloadName+lens" ->
+          (lenSize + Varint.sizeUnsigned(lenSize) + bestPayloadSize + 2),
+        "fl_plain" -> flSize) ++
+        dictCandidate.map { case (s, _, _, _) => "dict" -> s }
+    }
 
     var (winner, _) = candidates.minBy(_._2)
 
@@ -443,7 +428,7 @@ object ColumnCodec {
     // instead. The comparison is realized-body vs exact-body in the
     // same units (candidate sizes exclude the shared header + form
     // byte), so the rebuild only happens when it is a guaranteed win.
-    if (!flOnly && winner == s"${FsstBytes.name}+lens" && fsstExact == null) {
+    if (winner == s"${FsstBytes.name}+lens" && fsstExact == null) {
       val exactCandidates: Seq[(String, Long)] = {
         val (nm, sz) = payloadCandidates.filterNot(_._1 == FsstBytes.name).minBy(_._2)
         Seq(s"$nm+lens" -> (lenSize + Varint.sizeUnsigned(lenSize) + sz + 2),

@@ -30,8 +30,8 @@ import graft.sources.TableIO
   *
   * Exactly one shuffle of the payload (the pid repartition). The payload
   * passes through one job, the encode+write; the others are small: the
-  * bounds sample (one pass, count+reservoir fused), the manifest write
-  * and the whole-manifest totals (skipped under `wholeTableStats = false`).
+  * bounds sample (one pass, count+reservoir fused) and the manifest
+  * write.
   * Encoding is shuffle-free and embarrassingly parallel, mirroring the
   * reference's 128-aligned per-rank split
   * (/root/reference/src/file_io.cu:39-56); the reference's
@@ -97,39 +97,23 @@ object EncodeJob {
         * parquet write commit is atomic. Waves also bound driver state:
         * the manifest is built from per-pid accumulator summaries, so the
         * driver holds O(#pids in this wave) of them. */
-      pidUpperBound: Option[Int] = None,
-      /** "auto" = stats-driven selector (the engine); "fl" = FL bit-pack
-        * only, the exact work of the reference CPU path, for
-        * apples-to-apples throughput comparison. */
-      codecMode: String = "auto",
-      /** When false, skip the end-of-run whole-manifest totals
-        * aggregation and report THIS RUN's totals in Result.rows/
-        * rawBytes/encBytes/flBaselineBytes (pidsEncoded = pids committed
-        * this run). Batch callers want the running totals (default);
-        * a long-lived stream must NOT pay a manifest scan that grows
-        * with every micro-batch ever committed — per-batch overhead
-        * stays flat with this off. */
-      wholeTableStats: Boolean = true)
+      pidUpperBound: Option[Int] = None)
 
+  /** What THIS invocation did: pids it committed and skipped (already in
+    * the manifest), the rows and bytes of the pids it committed, and its
+    * phase timings. Whole-table figures stay in the manifest; summing it
+    * here would be a scan that grows with every committed attempt. */
   final case class Result(
       pidsEncoded: Long,
       pidsSkipped: Long,
-      rows: Long,
-      rawBytes: Long,
-      encBytes: Long,
+      rowsThisRun: Long,
+      rawBytesThisRun: Long,
+      encBytesThisRun: Long,
       flBaselineBytes: Long,
       wallNanos: Long,
-      boundsNanos: Long = 0L,
-      encodeNanos: Long = 0L,
-      manifestNanos: Long = 0L,
-      /** Work of THIS invocation only (rows/rawBytes/encBytes above are
-        * whole-manifest running totals — resume-skipped pids included —
-        * unless Config.wholeTableStats is false, in which case they
-        * equal the ThisRun fields): throughput math must divide
-        * this-run bytes by this-run wall. */
-      rowsThisRun: Long = 0L,
-      rawBytesThisRun: Long = 0L,
-      encBytesThisRun: Long = 0L)
+      boundsNanos: Long,
+      encodeNanos: Long,
+      manifestNanos: Long)
 
   /** Partition-count rule (README §Sizing at cluster scale): one pid per
     * ~128 MiB of RAW input so the post-shuffle per-task sort stays inside
@@ -435,7 +419,6 @@ object EncodeJob {
 
     val targetBytes = cfg.targetBlockBytes
     val maxRows = cfg.maxBlockRows
-    val flOnly = cfg.codecMode == "fl"
     // resolved BEFORE the job: every chunk carries the tag its manifest
     // row will carry, so a crash between the two commits is reconcilable
     // under the original attempt identity
@@ -469,7 +452,7 @@ object EncodeJob {
         $"text".cast("binary").as("text"), $"lang".cast("binary").as("lang"))
       .as[PidPage]
       .mapPartitions(it =>
-        summarizing(encodePartition(it, targetBytes, maxRows, flOnly, attemptId), summaryAcc))
+        summarizing(encodePartition(it, targetBytes, maxRows, attemptId), summaryAcc))
 
     // attempt lineage markers (see [[attemptsDir]]): begin- before the
     // chunk job, chunks- after its commit, both removed after the manifest
@@ -523,53 +506,22 @@ object EncodeJob {
     }
     if (manifestRows.nonEmpty)
       TableIO.write(spark.createDataset(manifestRows).toDF(), manifestDir(outDir), SaveMode.Append)
-    // (pids, rows, rawBytes, encBytes, flBaselineBytes) committed by
-    // THIS invocation, for Result
-    val thisRun = (manifestRows.length.toLong, manifestRows.map(_.rows).sum,
-      manifestRows.map(_.rawBytes).sum, manifestRows.map(_.encBytes).sum,
-      manifestRows.map(_.flBaselineBytes).sum)
     // attempt fully committed: clear its markers (see [[attemptsDir]])
     TableIO.delete(spark, s"${attemptsDir(outDir)}/begin-$attemptId")
     TableIO.delete(spark, s"${attemptsDir(outDir)}/chunks-$attemptId")
 
-    // empty input with no prior runs leaves no manifest at all — report
-    // zeros instead of failing the read. wholeTableStats=false skips the
-    // whole-manifest aggregation entirely (it grows with every committed
-    // attempt — a long-lived stream must not pay it per micro-batch) and
-    // reports this run's totals instead.
-    // stats._1 is pids committed THIS RUN in both branches: the
-    // whole-table branch counts distinct manifest pids and subtracts the
-    // resume-skipped ones there, so the Result construction below never
-    // has to re-adjust per branch (a past review misread exactly that).
-    val stats =
-      if (!cfg.wholeTableStats)
-        (thisRun._1, Some(thisRun._2), Some(thisRun._3), Some(thisRun._4),
-          Some(thisRun._5))
-      else if (!TableIO.exists(spark, manifestDir(outDir)))
-        (0L, None: Option[Long], None: Option[Long], None: Option[Long], None: Option[Long])
-      else {
-        val w = manifestScan(spark, outDir)
-          // DISTINCT pids, not manifest rows: a pid can carry one manifest
-          // row per attempt (streaming batches, reconcile), and rows minus
-          // completed-pid count would overcount pidsEncoded
-          .agg(countDistinct($"pid"), sum($"rows"), sum($"rawBytes"), sum($"encBytes"), sum($"flBaselineBytes"))
-          .as[(Long, Option[Long], Option[Long], Option[Long], Option[Long])].head()
-        (w._1 - completed.size, w._2, w._3, w._4, w._5)
-      }
+    val tEnd = System.nanoTime()
     Result(
-      pidsEncoded = stats._1,
+      pidsEncoded = manifestRows.length.toLong,
       pidsSkipped = completed.size.toLong,
-      rows = stats._2.getOrElse(0L),
-      rawBytes = stats._3.getOrElse(0L),
-      encBytes = stats._4.getOrElse(0L),
-      flBaselineBytes = stats._5.getOrElse(0L),
-      wallNanos = System.nanoTime() - t0,
+      rowsThisRun = manifestRows.map(_.rows).sum,
+      rawBytesThisRun = manifestRows.map(_.rawBytes).sum,
+      encBytesThisRun = manifestRows.map(_.encBytes).sum,
+      flBaselineBytes = manifestRows.map(_.flBaselineBytes).sum,
+      wallNanos = tEnd - t0,
       boundsNanos = tBounds - t0,
       encodeNanos = tEncode - tBounds,
-      manifestNanos = System.nanoTime() - tEncode,
-      rowsThisRun = thisRun._2,
-      rawBytesThisRun = thisRun._3,
-      encBytesThisRun = thisRun._4)
+      manifestNanos = tEnd - tEncode)
   }
 
   /** Explicit-schema METADATA scan of the chunk table: only the columns a
@@ -835,8 +787,8 @@ object EncodeJob {
     * pid change / row cap / byte cap, encode all five columns. Pure Scala
     * (no Spark types inside) — the JVM analog of the reference's
     * cpuCompress kernel, applied per column. */
-  def encodePartition(it: Iterator[PidPage], targetBlockBytes: Long, maxBlockRows: Int,
-                      flOnly: Boolean = false, attemptId: String = null): Iterator[EncodedChunk] = {
+  private def encodePartition(it: Iterator[PidPage], targetBlockBytes: Long, maxBlockRows: Int,
+                              attemptId: String): Iterator[EncodedChunk] = {
     new Iterator[EncodedChunk] {
       private var pending: PidPage = null
       private var blockIdxByPid = scala.collection.mutable.Map.empty[Int, Int]
@@ -859,15 +811,15 @@ object EncodeJob {
         }
         val idx = blockIdxByPid.getOrElse(pid, 0)
         blockIdxByPid(pid) = idx + 1
-        encodeChunk(pid, idx, buf.toArray, flOnly, attemptId)
+        encodeChunk(pid, idx, buf.toArray, attemptId)
       }
     }
   }
 
   private def len(b: Array[Byte]): Long = if (b == null) 0L else b.length.toLong
 
-  def encodeChunk(pid: Int, blockIdx: Int, rows: Array[PidPage],
-                  flOnly: Boolean = false, attemptId: String = null): EncodedChunk = {
+  private def encodeChunk(pid: Int, blockIdx: Int, rows: Array[PidPage],
+                          attemptId: String): EncodedChunk = {
     val t0 = System.nanoTime()
     // url is the range/sort key and the chunk's (urlMin, urlMax)
     // metadata — it has no null representation; fail NAMED, not as an
@@ -892,11 +844,11 @@ object EncodeJob {
 
     def asCol(name: String, e: ColumnCodec.Encoded) =
       EncodedColumn(name, e.codecName, e.bytes, e.rawBytes, e.bytes.length.toLong, e.flBaselineBytes)
-    val colUrl = asCol("url", ColumnCodec.encodeBytes(rows.map(_.url), flOnly))
-    val colTs = asCol("warc_ts", ColumnCodec.encodeLongs(tsMicros, tsNulls, flOnly))
-    val colHtml = asCol("html", ColumnCodec.encodeBytes(rows.map(_.html), flOnly))
-    val colText = asCol("text", ColumnCodec.encodeBytes(texts, flOnly))
-    val colLang = asCol("lang", ColumnCodec.encodeBytes(rows.map(_.lang), flOnly))
+    val colUrl = asCol("url", ColumnCodec.encodeBytes(rows.map(_.url)))
+    val colTs = asCol("warc_ts", ColumnCodec.encodeLongs(tsMicros, tsNulls))
+    val colHtml = asCol("html", ColumnCodec.encodeBytes(rows.map(_.html)))
+    val colText = asCol("text", ColumnCodec.encodeBytes(texts))
+    val colLang = asCol("lang", ColumnCodec.encodeBytes(rows.map(_.lang)))
     val cols = Seq(colUrl, colTs, colHtml, colText, colLang)
     // (tsMin, tsMax) over NON-null ts only — the DSv2 time-range skip's
     // chunk statistics (None = all-null chunk, prunable under any ts

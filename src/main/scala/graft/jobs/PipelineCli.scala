@@ -11,7 +11,9 @@ import graft.sources.{TableIO, WebtextGen}
   *   gen    <outParquet> <nDocs> [seed] [skewShare]
   *   ingest <inJsonlDir> <outParquet>          (crawl-drop JSONL -> Page table)
   *   encode <inParquet> <outDir> [partitions|auto] [pidUpperBound]
-  *          (auto/omitted = ~128 MiB of raw input per pid, floor 2x cores)
+  *          (auto/omitted = ~128 MiB of raw input per pid, floor 2x cores;
+  *          the JSON line reports the pids THIS run committed — a resumed
+  *          wave shows only its own rows and bytes; `stats` dumps the manifest)
   *   decode <outDir> <decodedParquet> [col,col[,..]]
   *          [loUrl hiUrl] [ts <loTs> <hiTs>]
   *          (ts bounds: epoch micros or ISO-8601 instants; a ts range
@@ -106,13 +108,9 @@ object PipelineCli {
         val cap = rest.drop(1).headOption.map(_.toInt)
         val input = TableIO.read(spark, in).as[graft.model.Page]
         val r = EncodeJob.run(spark, input, outDir,
-          EncodeJob.Config(numPartitions = parts, pidUpperBound = cap,
-            codecMode = sys.env.getOrElse("SPARK_GRAFT_CODEC_MODE", "auto")))
-        // gbps divides THIS run's bytes by this run's wall — rows/rawBytes/
-        // encBytes are whole-manifest totals and would inflate a resumed
-        // run's throughput by every prior run's bytes
+          EncodeJob.Config(numPartitions = parts, pidUpperBound = cap))
         val gbps = r.rawBytesThisRun / 1e9 / (r.wallNanos / 1e9)
-        println(f"""{"op":"encode","pidsEncoded":${r.pidsEncoded},"pidsSkipped":${r.pidsSkipped},"rows":${r.rows},"rawBytes":${r.rawBytes},"encBytes":${r.encBytes},"flBaselineBytes":${r.flBaselineBytes},"ratio":${r.encBytes.toDouble / math.max(1, r.rawBytes)}%.4f,"wallSec":${r.wallNanos / 1e9}%.2f,"boundsSec":${r.boundsNanos / 1e9}%.2f,"encodeSec":${r.encodeNanos / 1e9}%.2f,"manifestSec":${r.manifestNanos / 1e9}%.2f,"rowsThisRun":${r.rowsThisRun},"rawBytesThisRun":${r.rawBytesThisRun},"gbps":$gbps%.3f}""")
+        println(f"""{"op":"encode","pidsEncoded":${r.pidsEncoded},"pidsSkipped":${r.pidsSkipped},"rows":${r.rowsThisRun},"rawBytes":${r.rawBytesThisRun},"encBytes":${r.encBytesThisRun},"flBaselineBytes":${r.flBaselineBytes},"ratio":${r.encBytesThisRun.toDouble / math.max(1, r.rawBytesThisRun)}%.4f,"wallSec":${r.wallNanos / 1e9}%.2f,"boundsSec":${r.boundsNanos / 1e9}%.2f,"encodeSec":${r.encodeNanos / 1e9}%.2f,"manifestSec":${r.manifestNanos / 1e9}%.2f,"gbps":$gbps%.3f}""")
         spark.stop()
 
       case "decode" :: outDir :: out :: rest =>

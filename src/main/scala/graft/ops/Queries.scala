@@ -1734,10 +1734,7 @@ object Queries {
     // deterministic scratch dir per (process, session, input dir) with
     // stale-pid sweep + shutdown-hook cleanup — see [[processScratch]]
     val out = processScratch("graft-engine-rt", dir, sessionTok(spark))
-    // wholeTableStats=false: Result is discarded here — skip the
-    // end-of-run whole-manifest totals job (the oracle checks the rows)
-    EncodeJob.run(spark, pages, out,
-      EncodeJob.Config(numPartitions = 8, wholeTableStats = false))
+    EncodeJob.run(spark, pages, out, EncodeJob.Config(numPartitions = 8))
     DecodeJob.runProjected(spark, out, Seq("url", "text", "lang"))
       .select($"url", md5($"text".cast("binary")).as("text_md5"), $"lang")
   }
@@ -1788,8 +1785,7 @@ object Queries {
     else {
       val out = processScratch("graft-dsv2-rt", dir, sessionTok(spark))
       graft.jobs.EncodeJob.run(spark, enginePages(spark, dir), out,
-        // Result discarded — skip the whole-manifest totals job
-        graft.jobs.EncodeJob.Config(numPartitions = 8, wholeTableStats = false))
+        graft.jobs.EncodeJob.Config(numPartitions = 8))
       dsv2Memo.put(key, out)
       out
     }

@@ -214,12 +214,7 @@ final class GraftInsertableRelation(path: String, truncate: Boolean,
       val raw = if (est < BigInt(1L << 40)) est.toLong * 3 else 0L
       graft.jobs.EncodeJob.suggestPartitions(raw, spark.sparkContext.defaultParallelism)
     }
-    // wholeTableStats=false: this caller DISCARDS EncodeJob.Result, so
-    // the end-of-run whole-manifest totals aggregation would be a pure
-    // extra job per write (the CLI, which prints the totals, keeps it on)
-    val cfg = graft.jobs.EncodeJob.Config(numPartitions = parts,
-      codecMode = Option(options.get("codecMode")).getOrElse("auto"),
-      wholeTableStats = false)
+    val cfg = graft.jobs.EncodeJob.Config(numPartitions = parts)
     if (doOverwrite && TableIO.exists(spark, path)) {
       // STAGE-THEN-SWAP: encode into a sibling staging dir while the old
       // table stays intact, and only after the full pipeline commits do

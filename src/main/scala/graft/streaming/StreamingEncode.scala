@@ -151,12 +151,8 @@ object StreamingEncode {
           println(s"""{"op":"stream-encode","batchId":$batchId,"skipped":"already in manifest"}""")
         } else {
           val pages = batch.as[Page](Encoders.product[Page])
-          // wholeTableStats=false: the whole-manifest totals aggregation
-          // grows with every micro-batch ever committed — a long-lived
-          // stream would pay a linearly-growing stats job per batch for
-          // a log line. This-batch totals keep the per-batch cost flat.
           val r = EncodeJob.run(spark, pages, outDir,
-            cfg.copy(resume = false, attemptId = Some(tag), wholeTableStats = false))
+            cfg.copy(resume = false, attemptId = Some(tag)))
           // manifest is committed once run returns — record the O(1)
           // replay sidecar (a crash before this touch is covered by the
           // probe's manifest fallback)

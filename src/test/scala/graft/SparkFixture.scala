@@ -10,17 +10,9 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Recursive delete, null-safe against concurrently vanishing entries
-    * (listFiles returns null once a dir disappears) — the ONE copy every
-    * spec uses instead of five local variants. */
-  def rmrf(path: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      val children = if (f.isDirectory) f.listFiles() else null
-      if (children != null) children.foreach(rec)
-      f.delete()
-    }
-    rec(new java.io.File(path))
-  }
+  /** Recursive delete that unlinks symlinks instead of following them;
+    * see [[graft.ScalingLevel.rmrf]]. */
+  def rmrf(path: String): Unit = graft.ScalingLevel.rmrf(path)
 }
 
 object SparkFixture {

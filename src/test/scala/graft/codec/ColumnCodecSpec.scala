@@ -80,10 +80,13 @@ class ColumnCodecSpec extends AnyFunSuite with GenDriven {
         }
       }
     }
-    // forced flOnly form too (the property gen rarely picks it)
-    val vals = Array.tabulate(300)(i => s"row-$i".getBytes("UTF-8"))
-    val fl = ColumnCodec.encodeBytes(vals, flOnly = true)
+    // the fl_plain form too (the property gen rarely picks it): two
+    // one-byte rows, where the selector's own sizing picks fl_plain
+    val vals = Array(Array[Byte](1), Array[Byte](1))
+    val fl = ColumnCodec.encodeBytes(vals)
+    assert(fl.codecName == "fl_plain", fl.codecName)
     val v = ColumnCodec.decodeBytesView(fl.bytes)
+    assert(v.n == vals.length)
     vals.indices.foreach(i => assert(v.copyAt(i).toSeq == vals(i).toSeq))
   }
 
@@ -129,24 +132,37 @@ class ColumnCodecSpec extends AnyFunSuite with GenDriven {
   }
 
   test("flOnly mode: reference-equivalent FL form, round-trips, <= baseline") {
-    forAll(bytesCols) { values =>
-      val enc = ColumnCodec.encodeBytes(values, flOnly = true)
+    // The reference-equivalent FL forms on inputs the selector itself
+    // encodes in them (tiny columns); the encode-side FL-only switch is
+    // gone, the forms it forced are ordinary candidates. Two rows of 0x01: fl_plain bit-packs
+    // the 18-byte [lengths LE][payload] stream at 1 bit/byte into 5 B,
+    // against dict 7 B and composite 9 B; a null row adds only the bitmap.
+    // One 0L: fl_plain_i64 is 3 B, for/delta 4 B.
+    val one = Array[Byte](1)
+    Seq(Array(one, one), Array(one, null, one)).foreach { values =>
+      val enc = ColumnCodec.encodeBytes(values)
       assert(enc.codecName == "fl_plain", enc.codecName)
       assert(enc.bytes.length.toLong <= enc.flBaselineBytes)
       val back = ColumnCodec.decodeBytes(enc.bytes)
+      val view = ColumnCodec.decodeBytesView(enc.bytes)
+      assert(back.length == values.length && view.n == values.length)
       values.indices.foreach { i =>
-        if (values(i) == null) assert(back(i) == null)
-        else assert(back(i).toSeq == values(i).toSeq)
+        if (values(i) == null) assert(back(i) == null && view.isNull(i))
+        else {
+          assert(back(i).toSeq == values(i).toSeq)
+          assert(!view.isNull(i) && view.copyAt(i).toSeq == values(i).toSeq)
+        }
       }
     }
-    forAll(longCols) { case (values, nulls) =>
-      val enc = ColumnCodec.encodeLongs(values, nulls, flOnly = true)
+    Seq[(Array[Long], Array[Boolean])](
+      (Array(0L), null), (Array(0L, 0L), Array(false, true))).foreach { case (values, nulls) =>
+      val enc = ColumnCodec.encodeLongs(values, nulls)
       assert(enc.codecName == "fl_plain_i64", enc.codecName)
       assert(enc.bytes.length.toLong <= enc.flBaselineBytes)
       val (back, backN) = ColumnCodec.decodeLongs(enc.bytes)
       values.indices.foreach { i =>
         val isNull = nulls != null && nulls(i)
-        assert((backN != null && backN(i)) == isNull, s"flOnly null mask diverged at $i")
+        assert((backN != null && backN(i)) == isNull, s"null mask diverged at $i")
         if (!isNull) assert(back(i) == values(i))
       }
     }

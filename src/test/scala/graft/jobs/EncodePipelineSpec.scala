@@ -16,9 +16,9 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     val source = WebtextGen.pages(spark, 1000L, seed = 42L).cache()
 
     val res = EncodeJob.run(spark, source, outDir, EncodeJob.Config(numPartitions = 8))
-    assert(res.rows == 1000L)
-    assert(res.encBytes > 0 && res.encBytes <= res.flBaselineBytes,
-      s"enc=${res.encBytes} flBaseline=${res.flBaselineBytes}")
+    assert(res.rowsThisRun == 1000L)
+    assert(res.encBytesThisRun > 0 && res.encBytesThisRun <= res.flBaselineBytes,
+      s"enc=${res.encBytesThisRun} flBaseline=${res.flBaselineBytes}")
 
     val decoded = DecodeJob.run(spark, outDir)
     val report = VerifyJob.run(spark, source, decoded)
@@ -39,7 +39,7 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     val outDir = tmpDir("graft-empty")
     val empty = spark.emptyDataset[graft.model.Page]
     val res = EncodeJob.run(spark, empty, outDir, EncodeJob.Config(numPartitions = 4))
-    assert(res.rows == 0L && res.encBytes == 0L && res.pidsEncoded == 0L)
+    assert(res.rowsThisRun == 0L && res.encBytesThisRun == 0L && res.pidsEncoded == 0L)
     // and the empty output decodes as zero rows, full and projected
     assert(DecodeJob.run(spark, outDir).count() == 0L)
     assert(DecodeJob.runProjected(spark, outDir, Seq("url")).count() == 0L)
@@ -477,6 +477,38 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a fresh-directory encode runs five Spark jobs") {
+    val outDir = tmpDir("graft-jobcount")
+    val source = WebtextGen.pages(spark, 400L, seed = 9L)
+    val group = "graft-encode-jobcount"
+    val sentinel = "graft-encode-jobcount-sentinel"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "encode under count")
+      val res = try EncodeJob.run(spark, source, outDir, EncodeJob.Config(numPartitions = 3))
+        finally spark.sparkContext.clearJobGroup()
+      assert(res.rowsThisRun == 400L)
+      // same sentinel wait as the steady-state reconcile spec: the bus is
+      // FIFO, so once the sentinel's start event arrived every encode
+      // job's has too
+      spark.sparkContext.setJobGroup(sentinel, "listener-bus flush")
+      try spark.sparkContext.parallelize(1 to 2, 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains(sentinel), "sentinel job start never reached the listener")
+      // 2 bounds (reservoir map stage + merge), 1 pid-shuffle map stage,
+      // 1 chunk write, 1 manifest write
+      val jobs = scala.jdk.CollectionConverters.CollectionHasAsScala(groups).asScala.count(_ == group)
+      assert(jobs == 5, s"fresh-directory encode ran $jobs Spark jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("legacy tables (no attempts dir, null-tag chunks) reconcile once, then migrate") {
     import spark.implicits._
     val outDir = tmpDir("graft-legacy")
@@ -574,7 +606,7 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     // and the interrupted wave resumes to completion as usual
     val r2 = EncodeJob.run(spark, source, outDir,
       EncodeJob.Config(numPartitions = 4, attemptId = Some("job-X")))
-    assert(r2.rows == 500L)
+    assert(wave1Rows + r2.rowsThisRun == 500L)
     assert(VerifyJob.run(spark, source, DecodeJob.run(spark, outDir)).ok)
     source.unpersist()
   }
